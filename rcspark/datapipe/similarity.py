@@ -1348,8 +1348,15 @@ def nn_descent(
     from .hashing import digest60
 
     v = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
-    ranked = assign_global_seq(v, ["vec_id"], 0, npartitions=8).select(
-        "vec_id", "_v", F.col("seq").alias("_rk")
+    # kept once: every round joins it twice, and each unkept read would
+    # re-run the seq mapInPandas as its own concurrent stage. The returned
+    # frame reads it lazily, so it cannot be released here; a local
+    # checkpoint's blocks go with its RDD once that is garbage-collected,
+    # where a persist() would stay cached until unpersisted
+    ranked = (
+        assign_global_seq(v, ["vec_id"], 0, npartitions=8)
+        .select("vec_id", "_v", F.col("seq").alias("_rk"))
+        .localCheckpoint()
     )
     n = ranked.groupBy().agg(F.count("*").alias("_n"))
     seed = (

@@ -70,6 +70,12 @@ def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
     np.bitwise_or.at(bits, byte_idx, masks)
 
 
+def bloom_bytes() -> int:
+    """Size of the sketch empty_bloom allocates. bloom_update keeps every
+    shard's nbits, so a sketch grown from empty_bloom stays this size."""
+    return BLOOM_SHARDS * BLOOM_BITS_PER_SHARD // 8
+
+
 def empty_bloom(spark) -> DataFrame:
     rows = [
         (s, bytes(BLOOM_BITS_PER_SHARD // 8), BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES)
@@ -199,6 +205,7 @@ def filter_unseen(
     seen: DataFrame,
     persisted_out: list | None = None,
     broadcast_max_bytes: int = BLOOM_BROADCAST_MAX_BYTES,
+    sketch_bytes: int | None = None,
 ) -> DataFrame:
     """Rows of `candidates` whose (digest, url_canon) is NOT in the seen set.
 
@@ -211,7 +218,10 @@ def filter_unseen(
     over ≤ BLOOM_SHARDS rows). Under `broadcast_max_bytes` the bitmaps are
     broadcast and probed with a scalar pandas UDF (no shuffle); past it —
     a 10^10-URL filter is a few GiB — the cogrouped per-shard probe runs
-    instead, so no caller needs to know how big the filter has grown.
+    instead, so no caller needs to know how big the filter has grown. A
+    caller that already knows the size (the crawl engine grows its sketch
+    from empty_bloom, so it is bloom_bytes()) passes `sketch_bytes` and
+    skips that agg.
 
     The probed frontier is persisted before the fresh/maybe fan-out —
     without it, Spark recomputes the whole Bloom probe subtree once per
@@ -230,7 +240,8 @@ def filter_unseen(
     bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
     if persisted_out is not None:
         persisted_out.append(bloom)
-    sketch_bytes = (bloom.agg(F.sum("nbits").alias("b")).first()["b"] or 0) // 8
+    if sketch_bytes is None:
+        sketch_bytes = (bloom.agg(F.sum("nbits").alias("b")).first()["b"] or 0) // 8
     if sketch_bytes <= broadcast_max_bytes:
         probed = bloom_probe_broadcast(candidates, bloom, resources_out=persisted_out)
         if persisted_out is None:

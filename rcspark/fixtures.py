@@ -295,6 +295,8 @@ def make_fixture(
         idx = canon_urls.index(canon)
         statuses[idx] = 200  # force seeds fetchable
         web.loc[idx, "status"] = 200
+        # a 200 carries no redirect: drop the target drawn if it was a 301
+        web.at[idx, "redirect_to"] = None
         seed_rows.append({"url": _noisy(canon, rng), "priority": 0})
     seeds = pd.DataFrame(seed_rows)
 

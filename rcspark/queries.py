@@ -20886,6 +20886,7 @@ def emb_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen = [(0, int(first.vec_id), None)]
     center_q = list(first.q)
     d = pts.select("vec_id", "q", d2_to(center_q).alias("dmin"))
+    prev = None
     for t in range(1, _KCENTER_K):
         d = d.persist()
         top = (
@@ -20906,12 +20907,20 @@ def emb_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         chosen.append((t, int(top.vec_id), int(top.d_sel)))
+        # this round's collect has run: the previous round's d is no
+        # longer read by anything (its child is materialized now)
+        if prev is not None:
+            prev.unpersist()
+        prev = d
         d = d.select(
             "vec_id",
             "q",
             F.least(F.col("dmin"), d2_to(list(top.q))).alias("dmin"),
         )
     radius = int(d.agg(F.max("dmin")).collect()[0][0])
+    if prev is not None:
+        prev.unpersist()
+    pts.unpersist()
     sel = spark.createDataFrame(
         [(r, v, ds) for (r, v, ds) in chosen],
         "round long, vec_id long, d_sel long",
@@ -21562,6 +21571,9 @@ _CHANGED_THIS_ROUND = [
     # new in batch 60 (KMV set-op sketches + pair dataset card)
     "agg_kmv_setops",
     "img_pair_dataset_card",
+    # new in batch 59 (text-overlay gate + LLM-watermark detection)
+    "img_text_density",
+    "doc_watermark_detect",
     # new in batch 58 (JSON-LD caption mining + unpivot)
     "crawl_jsonld_captions",
     "agg_unpivot_events",

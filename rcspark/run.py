@@ -17,6 +17,16 @@ One wave = one deterministic batch of Spark jobs:
   next pending = leftover ∪ retries ∪ (discoveries −Bloom/seen−)
   commit: frontier_pending, seen, bloom, fetch_log, corpus, lineage + manifest
 
+Sized to the wave: the manifest carries the pending row count (n_pending),
+so the wave plans without counting anything first. n_pending bounds the
+rows scheduled, and the crawl-order seq fans out to one partition per
+65,536-row Arrow batch (at most 32). A wave that fits one batch takes its
+seq without a shuffle or a driver round-trip. The robots-denied, leftover
+and fetched rows are computed in one query and kept until the commit, and
+so are the new URLs; the six table writes read those kept rows, one task
+per Arrow batch of them, and run only their own tails. The two
+shard-bucketed writes let AQE pick their task count.
+
 Resume exactness: every wave's outputs land under wave-numbered dirs and the
 manifest is advanced atomically afterwards (rcspark.tables). Killing the
 driver between writes leaves uncommitted dirs that the next run overwrites —
@@ -28,17 +38,18 @@ monotonically_increasing_id / current_timestamp anywhere).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import constants as C
-from .dedup import bloom_update, empty_bloom, filter_unseen
+from .dedup import bloom_bytes, bloom_update, empty_bloom, filter_unseen
 from .fetch import classify_outcome, simulate_fetch
 from .parse import parse_page
 from .robots import apply_robots_gate, robots_table
-from .schedule import assign_global_seq, rank_within_budget, with_budget
+from .schedule import assign_global_seq, rank_within_budget, wave_partitions, with_budget
 from .tables import (
     BLOOM_SCHEMA,
     CORPUS_SCHEMA,
@@ -64,16 +75,71 @@ def _with_canon_cols(df: DataFrame, raw: str = "raw") -> DataFrame:
     )
 
 
-def _observed_count(obs: Observation, fallback: DataFrame) -> int:
-    """Read an observe() count metric; fall back to a count() job when the
-    metric is missing. AQE's empty-relation propagation can collapse an
-    all-empty plan and drop the CollectMetrics node (seen at the drain
-    wave), leaving the Observation with a schemaless row — in exactly that
-    case the fallback count is near-free."""
+def _observed_counts(obs: Observation, fallbacks: dict[str, DataFrame]) -> dict[str, int]:
+    """Read the observe() count metrics named by `fallbacks`; when they are
+    missing, count each fallback frame instead. AQE's empty-relation
+    propagation can collapse an all-empty plan and drop the CollectMetrics
+    node (seen at the drain wave), leaving the Observation with a
+    schemaless row — in exactly that case the fallback counts are
+    near-free."""
     try:
-        return int(obs.get["n"])
+        got = obs.get
+        return {n: int(got[n] or 0) for n in fallbacks}
     except Exception:
-        return fallback.count()
+        return {n: df.count() for n, df in fallbacks.items()}
+
+
+def _materialize(
+    frames: dict[str, DataFrame], kept_out: list[DataFrame]
+) -> tuple[dict[str, DataFrame], dict[str, int]]:
+    """Compute `frames` in one Spark query and keep their rows. Returns
+    each frame read back from the kept rows, and its row count.
+
+    The frames are unioned under a tag column, so a subplan they share (a
+    shuffle, a broadcast) runs once: Spark reuses identical exchanges
+    within a query. It does not reuse them above a persisted frame (AQE
+    plans each read of a cache as its own stage), so the frames should
+    not read persisted inputs. localCheckpoint keeps the rows and cuts
+    the lineage, so the wave's table writes neither recompute the
+    subplans nor get re-planned when a write lands under a path the plan
+    reads (Spark's recacheByPath); the counts ride on its job as
+    observe() metrics. A persist() of the union instead cost 3 s more per
+    bootstrap and two waves of crawl_drain (local[4], 4-vCPU host). The
+    caller passes the frame appended to `kept_out` to _release once the
+    wave is committed. The returned frames read the kept rows in
+    wave_partitions(rows kept) tasks; the query that computed them
+    (fetch, parse) kept its own parallelism.
+    """
+    names = list(frames)
+    tagged = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        (df.withColumn("_part", F.lit(i)) for i, df in enumerate(frames.values())),
+    )
+    obs = Observation()
+    kept = tagged.observe(
+        obs,
+        *(F.sum((F.col("_part") == i).cast("long")).alias(n) for i, n in enumerate(names)),
+    ).localCheckpoint()
+    kept_out.append(kept)
+
+    def read(rows: DataFrame) -> dict[str, DataFrame]:
+        return {
+            n: rows.filter(F.col("_part") == i).select(*frames[n].columns)
+            for i, n in enumerate(names)
+        }
+
+    counts = _observed_counts(obs, read(kept))
+    return read(kept.coalesce(wave_partitions(sum(counts.values())))), counts
+
+
+def _release(kept: list[DataFrame]) -> None:
+    """Drop the blocks of the frames _materialize kept. Left alone they
+    stay until the JVM garbage-collects their RDD (Spark's ContextCleaner,
+    by default a periodic GC every 30 min), so a long crawl would hold
+    every finished wave. PySpark has no public call for this; the kept
+    frame's plan is the checkpointed RDD itself."""
+    for df in kept:
+        df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 @dataclass
@@ -113,7 +179,9 @@ class CrawlEngine:
         self.wh = Warehouse(spark, root)
         self.web = web
         self.corpus_src = corpus_src
-        self.robots = robots_table(spark, robots_pdf).persist()
+        # not persisted: a cached input would keep the wave's one query
+        # from reusing the robots broadcast across its branches (_materialize)
+        self.robots = robots_table(spark, robots_pdf)
         self.seeds_pdf = seeds_pdf
         self.allowed_hosts = list(allowed_hosts)
         self.transport = transport
@@ -135,15 +203,36 @@ class CrawlEngine:
         # in-file seed dedup: first occurrence wins (seed-list order is data)
         w = Window.partitionBy("url_canon").orderBy("_seed_idx")
         fr = fr.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-        fr = fr.select([f.name for f in FRONTIER_SCHEMA.fields])
-        self.wh.write_wave("frontier_pending", fr, 0)
-        seen = fr.select(
-            "digest", "url_canon", F.lit(0).alias("wave")
+        # computed once for its three tables; its row count is wave 0's
+        # n_pending
+        kept_rows: list[DataFrame] = []
+        kept, counts = _materialize(
+            {"frontier": fr.select([f.name for f in FRONTIER_SCHEMA.fields])}, kept_rows
         )
-        self.wh.write_wave("seen", seen, 0)
-        bloom = bloom_update(fr.select("digest"), empty_bloom(self.spark))
-        self.wh.write_wave("bloom", bloom, 0)
-        self.wh.commit(0, {"seq_offset": 0})
+        fr = kept["frontier"]
+        self._write_tables(
+            0,
+            [
+                ("frontier_pending", fr),
+                ("seen", fr.select("digest", "url_canon", F.lit(0).alias("wave"))),
+                ("bloom", bloom_update(fr.select("digest"), empty_bloom(self.spark))),
+            ],
+        )
+        self.wh.commit(0, {"seq_offset": 0, "n_pending": counts["frontier"]})
+        _release(kept_rows)
+
+    def _write_tables(self, wave: int, writes: list[tuple[str, DataFrame]]) -> None:
+        """Write one wave's tables concurrently (Spark's scheduler accepts
+        jobs from multiple threads) and wait for all of them: the barrier
+        before commit() keeps the snapshot atomic."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futures = [
+                pool.submit(self.wh.write_wave, name, df, wave) for name, df in writes
+            ]
+            for f in futures:
+                f.result()  # re-raise any write failure before committing
 
     # -- one wave ----------------------------------------------------------
     def run_wave(self) -> WaveStats | None:
@@ -155,12 +244,13 @@ class CrawlEngine:
         t = c_prev  # oracle wave number being processed
         seq_offset = int(meta.get("seq_offset", 0))
 
-        # drain check from the manifest (written with each commit) — saves a
-        # Spark action per wave; fall back to counting for old manifests
+        # drain check and seq fan-out from the manifest (n_pending is
+        # written with each commit, the bootstrap's included) — no Spark
+        # action; a manifest without it is counted once
         pending = self.wh.read_snapshot("frontier_pending", c_prev, FRONTIER_SCHEMA)
         n_pending_prev = meta.get("n_pending")
         if n_pending_prev is None:
-            n_pending_prev = pending.limit(1).count()
+            n_pending_prev = pending.count()
         if n_pending_prev == 0:
             return None
         seen = self.wh.read_appends("seen", c_prev, SEEN_SCHEMA)
@@ -169,37 +259,46 @@ class CrawlEngine:
 
         # 1. robots gate (A7) — broadcast join, no shuffle of the frontier
         gated = apply_robots_gate(pending, self.robots)
-        denied = gated.filter(~F.col("robots_allowed")).persist()
+        denied = gated.filter(~F.col("robots_allowed"))
         cand = gated.filter(F.col("robots_allowed"))
 
-        # 2-4. budgets + salted rank + global crawl-order seq (A5, A6)
+        # 2-4. budgets + salted rank + global crawl-order seq (A5, A6).
+        # n_pending bounds the rows scheduled, so it sizes the seq fan-out:
+        # a wave that fits one Arrow batch gets one partition and no
+        # driver round-trip.
         scheduled, leftover = rank_within_budget(with_budget(cand))
-        gc_dfs: list[DataFrame] = []
+        gc_dfs: list[DataFrame] = []  # persisted; unpersisted after commit
+        kept_rows: list[DataFrame] = []  # _materialize's; released after commit
         # (fetch_ms, host, j): j breaks the within-host ties that burst
         # mode (slot_group > 1) introduces — still a unique total order
         scheduled = assign_global_seq(
             scheduled, [F.col("fetch_ms"), F.col("host"), F.col("j")], seq_offset,
-            persisted_out=gc_dfs,
+            npartitions=wave_partitions(n_pending_prev), persisted_out=gc_dfs,
         )
 
-        # 5. fetch + outcome (A10-A12). No count() action here: n_scheduled
-        # rides as an observe() metric on the fetch_log write (step 12) —
-        # one of the three per-wave driver jobs VERDICT r1 #8 retired.
+        # 5-6. fetch + outcome (A10-A12) + parse of the 200s (A14). The
+        # parse output replaces the body, which is not kept (the UDF is
+        # handed every row's body; `when` keeps the 200s' parse). Materialized
+        # with the robots-denied and leftover rows in ONE query: the gate,
+        # the two rank windows, the fetch and the parse run once for the
+        # whole wave, and n_scheduled comes back on the same job.
         if self.transport is not None:
             from .fetch import fetch_http_arrow
 
             fetched = fetch_http_arrow(scheduled, self.transport)
         else:
             fetched = simulate_fetch(scheduled, self.web)
-        outcome = classify_outcome(fetched).persist()
-
-        # 6. parse 200s (A14) — select narrow columns BEFORE the UDF so the
-        # body column never rides through later stages (UDFs block pruning)
-        parsed = (
-            outcome.filter(F.col("result") == "fetched")
-            .select("seq", "depth", "priority", parse_page(F.col("body")).alias("p"))
-            .select("seq", "depth", "priority", "p.links", "p.image_url", "p.caption")
-            .persist()
+        outcome = classify_outcome(fetched)
+        outcome = outcome.withColumn(
+            "p", F.when(F.col("result") == "fetched", parse_page(F.col("body")))
+        ).drop("body")
+        kept, counts = _materialize(
+            {"outcome": outcome, "denied": denied, "leftover": leftover}, kept_rows
+        )
+        outcome, denied, leftover = kept["outcome"], kept["denied"], kept["leftover"]
+        n_scheduled = counts["outcome"]
+        parsed = outcome.filter(F.col("result") == "fetched").select(
+            "seq", "depth", "priority", "p.links", "p.image_url", "p.caption"
         )
 
         # 7. discoveries: links (depth+1, priority 0) ∪ redirect targets
@@ -230,20 +329,22 @@ class CrawlEngine:
         disc = disc.withColumn("_rn", F.row_number().over(w_first)).filter(
             F.col("_rn") == 1
         )
-        new_urls = (
-            filter_unseen(disc, bloom, seen, persisted_out=gc_dfs)
-            .select(
-                "url_canon",
-                "digest",
-                "host",
-                "path",
-                "priority",
-                "depth",
-                F.lit(t + 1).alias("discovered_wave"),
-                F.lit(0).alias("retry_count"),
-            )
-            .persist()
-        )  # n_new comes from the seen write's observe() metric (step 12)
+        new_urls = filter_unseen(
+            disc, bloom, seen, persisted_out=gc_dfs, sketch_bytes=bloom_bytes()
+        ).select(
+            "url_canon",
+            "digest",
+            "host",
+            "path",
+            "priority",
+            "depth",
+            F.lit(t + 1).alias("discovered_wave"),
+            F.lit(0).alias("retry_count"),
+        )
+        # read by three writes (frontier_pending, seen, bloom) and counted
+        # for lineage: compute it once
+        kept, counts = _materialize({"new_urls": new_urls}, kept_rows)
+        new_urls, n_new = kept["new_urls"], counts["new_urls"]
 
         # 8. retries (A11) — bypass the dupefilter
         retries = (
@@ -296,89 +397,50 @@ class CrawlEngine:
             new_corpus = convert_images(new_corpus, self.store_format)
 
         # 10. fetch_log (+ robots-denied rows, seq NULL)
-        log = outcome.select(
-            F.lit(t).alias("wave"),
-            "seq",
-            "url_canon",
-            "digest",
-            "host",
-            F.col("status").cast("int"),
-            "result",
-            "fetch_ms",
-            "priority",
-            "depth",
-            "retry_count",
-        )
-        denied_log = denied.select(
-            F.lit(t).alias("wave"),
-            F.lit(None).cast("long").alias("seq"),
-            "url_canon",
-            "digest",
-            "host",
-            F.lit(None).cast("int").alias("status"),
-            F.lit(C.ST_ROBOTS_DENIED).alias("result"),
-            F.lit(None).cast("long").alias("fetch_ms"),
-            "priority",
-            "depth",
-            "retry_count",
-        )
-
-        # 11. per-partition lineage (A18, north-rule upgrade of global stats)
-        def part_lineage(df: DataFrame) -> DataFrame:
-            return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-                F.min("digest").alias("min_digest"),
-                F.max("digest").alias("max_digest"),
-                F.count("*").alias("scheduled"),
-                F.sum((F.col("result") == "fetched").cast("long")).alias("fetched"),
-                F.sum((F.col("result") == "retry").cast("long")).alias("retried"),
-                F.lit(0).cast("long").alias("robots_denied"),
-                F.sum((F.col("result") == "failed").cast("long")).alias("failed"),
+        log = (
+            outcome.select(
+                F.lit(t).alias("wave"),
+                "seq",
+                "url_canon",
+                "digest",
+                "host",
+                F.col("status").cast("int"),
+                "result",
+                "fetch_ms",
+                "priority",
+                "depth",
+                "retry_count",
             )
-
-        lineage_parts = part_lineage(outcome).unionByName(
-            denied.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-                F.min("digest").alias("min_digest"),
-                F.max("digest").alias("max_digest"),
-                F.lit(0).cast("long").alias("scheduled"),
-                F.lit(0).cast("long").alias("fetched"),
-                F.lit(0).cast("long").alias("retried"),
-                F.count("*").alias("robots_denied"),
-                F.lit(0).cast("long").alias("failed"),
+            .unionByName(
+                denied.select(
+                    F.lit(t).alias("wave"),
+                    F.lit(None).cast("long").alias("seq"),
+                    "url_canon",
+                    "digest",
+                    "host",
+                    F.lit(None).cast("int").alias("status"),
+                    F.lit(C.ST_ROBOTS_DENIED).alias("result"),
+                    F.lit(None).cast("long").alias("fetch_ms"),
+                    "priority",
+                    "depth",
+                    "retry_count",
+                )
             )
         )
 
-        # 12. commit wave t as snapshot c = t+1. All SIX table writes are
-        # submitted concurrently (Spark's scheduler accepts jobs from
-        # multiple threads); the barrier before commit() keeps the snapshot
-        # atomic. The wave's three bookkeeping counts (n_scheduled / n_new
-        # / n_pending) ride as observe() metrics ON those write jobs
-        # instead of separate count() actions (VERDICT r1 #8), and lineage
-        # gets n_new as a broadcast one-row agg instead of a post-barrier
-        # literal (VERDICT r3 #6) — zero serial writes remain.
-        c = t + 1
-        obs_sched = Observation()
-        obs_new = Observation()
-        obs_pending = Observation()
-        next_pending = (
-            leftover.select([f.name for f in FRONTIER_SCHEMA.fields])
-            .unionByName(retries)
-            .unionByName(new_urls.select([f.name for f in FRONTIER_SCHEMA.fields]))
-            .observe(obs_pending, F.count(F.lit(1)).alias("n"))
-        )
-        seen_out = new_urls.select(
-            "digest", "url_canon", F.lit(c).alias("wave")
-        ).observe(obs_new, F.count(F.lit(1)).alias("n"))
-        log_out = log.observe(obs_sched, F.count(F.lit(1)).alias("n")).unionByName(
-            denied_log
-        )
-        # lineage joins the concurrent-write pool (VERDICT r3 item 6 — it
-        # used to trail the barrier because it needed n_new as a literal):
-        # the per-wave new_urls count rides in as a broadcast one-row agg
-        # over the PERSISTED new_urls frame instead, so no write is serial.
-        lineage = lineage_parts.crossJoin(
-            F.broadcast(
-                new_urls.agg(F.count(F.lit(1)).cast("long").alias("new_urls"))
-            )
+        # 11. per-partition lineage (A18, north-rule upgrade of global
+        # stats) over the fetch_log rows; n_new is known, so it is a literal
+        def n_result(result: str):
+            return F.sum((F.col("result") == result).cast("long"))
+
+        lineage = log.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+            F.min("digest").alias("min_digest"),
+            F.max("digest").alias("max_digest"),
+            F.sum((F.col("result") != C.ST_ROBOTS_DENIED).cast("long")).alias("scheduled"),
+            n_result("fetched").alias("fetched"),
+            n_result("retry").alias("retried"),
+            n_result(C.ST_ROBOTS_DENIED).alias("robots_denied"),
+            n_result("failed").alias("failed"),
         ).select(
             F.lit(t).alias("wave"),
             "partition_id",
@@ -389,35 +451,44 @@ class CrawlEngine:
             "retried",
             "robots_denied",
             "failed",
-            "new_urls",
+            F.lit(n_new).cast("long").alias("new_urls"),
         )
+
+        # 12. commit wave t as snapshot c = t+1. All SIX table writes are
+        # submitted concurrently (Spark's scheduler accepts jobs from
+        # multiple threads); the barrier before commit() keeps the snapshot
+        # atomic. They read the materialized frames above, so each runs
+        # only its own tail of the plan. n_scheduled and n_new came back
+        # with the materializations; n_pending rides as an observe() metric
+        # on the frontier_pending write (VERDICT r1 #8: no count() action).
+        c = t + 1
+        obs_pending = Observation()
+        next_pending = (
+            leftover.select([f.name for f in FRONTIER_SCHEMA.fields])
+            .unionByName(retries)
+            .unionByName(new_urls.select([f.name for f in FRONTIER_SCHEMA.fields]))
+            .observe(obs_pending, F.count(F.lit(1)).alias("n_pending"))
+        )
+        seen_out = new_urls.select("digest", "url_canon", F.lit(c).alias("wave"))
         writes = [
             ("frontier_pending", next_pending),
             ("seen", seen_out),
             ("bloom", bloom_update(new_urls.select("digest"), bloom)),
-            ("fetch_log", log_out),
+            ("fetch_log", log),
             ("corpus", new_corpus),
             ("lineage", lineage),
         ]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            futures = [
-                pool.submit(self.wh.write_wave, name, df, c) for name, df in writes
-            ]
-            for f in futures:
-                f.result()  # re-raise any write failure before committing
-        n_scheduled = _observed_count(obs_sched, outcome)
-        n_new = _observed_count(obs_new, new_urls)
-        n_pending = _observed_count(obs_pending, next_pending)
+        self._write_tables(c, writes)
+        n_pending = _observed_counts(obs_pending, {"n_pending": next_pending})["n_pending"]
         # {**meta, ...}: carry forward manifest keys this wave doesn't own
         # (e.g. the compaction watermark — dropping it would silently point
         # readers back at per-wave dirs a gc() may have deleted)
         self.wh.commit(
             c, {**meta, "seq_offset": seq_offset + n_scheduled, "n_pending": n_pending}
         )
-        for df in (denied, outcome, parsed, new_urls, *gc_dfs):
+        for df in gc_dfs:
             df.unpersist()
+        _release(kept_rows)
         return WaveStats(t, n_scheduled, n_new, n_pending)
 
     def run(self, max_waves: int = 10_000) -> list[WaveStats]:

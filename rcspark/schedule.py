@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from . import constants as C
 from .constants import HOST_SALTS, PER_HOST_CAP, WAVE_SECONDS
+from .session import ARROW_BATCH_ROWS
 
 
 def order_cols() -> list:
@@ -109,11 +110,22 @@ def rank_within_budget(frontier: DataFrame) -> tuple[DataFrame, DataFrame]:
     return scheduled, leftover
 
 
+SEQ_MAX_PARTITIONS = 32
+
+
+def wave_partitions(n_rows: int) -> int:
+    """Partitions for at most `n_rows` rows of a crawl wave: one per Arrow
+    batch (the unit assign_global_seq's mapInPandas is handed), capped at
+    SEQ_MAX_PARTITIONS. Sizes the seq fan-out and the reads of the wave's
+    kept rows (run._materialize), never the query that computes them."""
+    return max(1, min(SEQ_MAX_PARTITIONS, -(-n_rows // ARROW_BATCH_ROWS)))
+
+
 def assign_global_seq(
     df: DataFrame,
     order_cols: list,
     seq_offset: int,
-    npartitions: int = 32,
+    npartitions: int = SEQ_MAX_PARTITIONS,
     persisted_out: list | None = None,
 ) -> DataFrame:
     """+ seq long: the global crawl-order index, without a single-partition window.
@@ -123,23 +135,32 @@ def assign_global_seq(
     partition) inside a mapInPandas — the global sort never funnels through
     one task. `order_cols` must be a unique total order (here:
     (fetch_ms, host), unique because fetch_ms strictly increases per host).
+
+    With ``npartitions=1`` (a wave that fits one Arrow batch, see
+    wave_partitions) the only offset is `seq_offset`: no persist and no
+    count collect, so the result stays lazy.
     """
     import numpy as np  # local import: executors need it anyway for the UDF
 
-    part = (
-        df.repartitionByRange(npartitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    # one partition needs no range split: coalesce is narrow, no shuffle
+    spread = (
+        df.coalesce(1) if npartitions == 1 else df.repartitionByRange(npartitions, *order_cols)
     )
-    if persisted_out is not None:
-        persisted_out.append(part)
-    counts = {r["_pid"]: r["count"] for r in part.groupBy("_pid").count().collect()}
-    offsets = {}
-    acc = seq_offset
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    part = spread.sortWithinPartitions(*order_cols).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+    if npartitions == 1:
+        offsets = {0: seq_offset}
+    else:
+        part = part.persist()
+        if persisted_out is not None:
+            persisted_out.append(part)
+        counts = {r["_pid"]: r["count"] for r in part.groupBy("_pid").count().collect()}
+        offsets = {}
+        acc = seq_offset
+        for pid in sorted(counts):
+            offsets[pid] = acc
+            acc += counts[pid]
 
     from pyspark.sql import types as T
 

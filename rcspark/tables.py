@@ -227,24 +227,32 @@ class Warehouse:
 
         BUCKETED_TABLES are clustered by digest shard before writing
         (repartition by shard → partitionBy(shard) → one file per shard)."""
-        from pyspark.sql import functions as F
-
         final = self._wave_dir(table, wave)
         tmp = final + ".inprogress"
         for p in (final, tmp):
             if os.path.exists(p):
                 shutil.rmtree(p)  # garbage from a killed, uncommitted run
+        self._write_data(table, df, tmp)
+        os.rename(tmp, final)
+
+    def _write_data(self, table: str, df: DataFrame, path: str) -> None:
+        """Write `df` as parquet under `path`. BUCKETED_TABLES are hashed
+        on shard first: every row of one shard meets in one task, so each
+        non-empty shard= dir gets one file. The repartition names no
+        partition count, so AQE sizes the task count to the rows instead
+        of fanning a small wave out to N_SHARDS tasks."""
         if table in BUCKETED_TABLES and "digest" in df.columns:
+            from pyspark.sql import functions as F
+
             (
                 df.withColumn("shard", F.pmod(F.col("digest"), F.lit(N_SHARDS)).cast("int"))
-                .repartition(N_SHARDS, "shard")
+                .repartition("shard")
                 .write.mode("overwrite")
                 .partitionBy("shard")
-                .parquet(tmp)
+                .parquet(path)
             )
         else:
-            df.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
+            df.write.mode("overwrite").parquet(path)
 
     # -- compaction (Iceberg rewrite-data-files analogue) -------------------
     def compact(self, table: str, schema: T.StructType) -> None:
@@ -279,20 +287,7 @@ class Warehouse:
         # Write the replacement FIRST; any prior compact dir (a lower
         # watermark, or an uncommitted leftover at this name) stays intact
         # and readable until the new copy exists on disk.
-        if table in BUCKETED_TABLES and "digest" in df.columns:
-            from pyspark.sql import functions as F
-
-            (
-                df.withColumn(
-                    "shard", F.pmod(F.col("digest"), F.lit(N_SHARDS)).cast("int")
-                )
-                .repartition(N_SHARDS, "shard")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(tmp)
-            )
-        else:
-            df.write.mode("overwrite").parquet(tmp)
+        self._write_data(table, df, tmp)
         if os.path.exists(final):  # uncommitted leftover from a killed attempt
             old = final + ".superseded"
             if os.path.exists(old):
