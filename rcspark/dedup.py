@@ -20,8 +20,12 @@ anti-joins only ~1% of candidates instead of all of them. Locally we run
 P=32, m=2^20 (constants.py).
 
 The Bloom update is itself a cogrouped map: new digests are OR-ed into their
-shard's bitmap and the full (small) bloom table is rewritten as the wave's
-snapshot — the classic "sketch as data, not as service" Spark pattern.
+shard's bitmap and the sketch's shards are rewritten as the wave's snapshot
+— the classic "sketch as data, not as service" Spark pattern. The sketch is
+sparse: a shard's bitmap is allocated with its first digest, and a missing
+shard probes all-miss. The crawl engine grows its sketch from an empty
+frame, so its bloom table holds only the shards its URLs reached, and
+bloom_bytes() is an upper bound on its size.
 """
 
 from __future__ import annotations
@@ -71,12 +75,17 @@ def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
 
 
 def bloom_bytes() -> int:
-    """Size of the sketch empty_bloom allocates. bloom_update keeps every
-    shard's nbits, so a sketch grown from empty_bloom stays this size."""
+    """Size of the sketch empty_bloom allocates: every shard at the default
+    nbits. bloom_update keeps a shard's nbits and allocates a missing shard
+    at the default, so this bounds any sketch grown from empty_bloom (equal)
+    or from an empty frame (sparse: at most this)."""
     return BLOOM_SHARDS * BLOOM_BITS_PER_SHARD // 8
 
 
 def empty_bloom(spark) -> DataFrame:
+    """Every shard with an all-zero bitmap, built from a driver-side list
+    (read back in Python workers). The crawl engine starts from an empty
+    frame instead and lets bloom_update allocate the shards it reaches."""
     rows = [
         (s, bytes(BLOOM_BITS_PER_SHARD // 8), BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES)
         for s in range(BLOOM_SHARDS)
@@ -219,9 +228,9 @@ def filter_unseen(
     broadcast and probed with a scalar pandas UDF (no shuffle); past it —
     a 10^10-URL filter is a few GiB — the cogrouped per-shard probe runs
     instead, so no caller needs to know how big the filter has grown. A
-    caller that already knows the size (the crawl engine grows its sketch
-    from empty_bloom, so it is bloom_bytes()) passes `sketch_bytes` and
-    skips that agg.
+    caller that already knows a bound on the size (the crawl engine's
+    sketch is at most bloom_bytes()) passes `sketch_bytes` and skips that
+    agg.
 
     The probed frontier is persisted before the fresh/maybe fan-out —
     without it, Spark recomputes the whole Bloom probe subtree once per

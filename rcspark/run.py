@@ -27,6 +27,16 @@ so are the new URLs; the six table writes read those kept rows, one task
 per Arrow batch of them, and run only their own tails. The two
 shard-bucketed writes let AQE pick their task count.
 
+One-time costs are paid once per session, not per wave. The engine builds
+no frame from a driver-side list, whose rows Spark would read back through
+Python workers under a second daemon: the bootstrap grows its Bloom sketch
+from an empty zero-partition frame (so the sketch holds only the shards
+its URLs reached), and a missing table reads as a zero-partition frame
+that runs no task. rcspark.session does the rest: every Python worker
+forks from one daemon that has the UDF modules imported
+(rcspark.pydaemon), and the generated-code cache holds a wave's classes
+until the next wave reuses them.
+
 Resume exactness: every wave's outputs land under wave-numbered dirs and the
 manifest is advanced atomically afterwards (rcspark.tables). Killing the
 driver between writes leaves uncommitted dirs that the next run overwrites —
@@ -45,7 +55,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import constants as C
-from .dedup import bloom_bytes, bloom_update, empty_bloom, filter_unseen
+from .dedup import bloom_bytes, bloom_update, filter_unseen
 from .fetch import classify_outcome, simulate_fetch
 from .parse import parse_page
 from .robots import apply_robots_gate, robots_table
@@ -58,6 +68,7 @@ from .tables import (
     LINEAGE_SCHEMA,
     SEEN_SCHEMA,
     Warehouse,
+    empty_frame,
 )
 from .urlnorm import canon_col
 
@@ -215,7 +226,12 @@ class CrawlEngine:
             [
                 ("frontier_pending", fr),
                 ("seen", fr.select("digest", "url_canon", F.lit(0).alias("wave"))),
-                ("bloom", bloom_update(fr.select("digest"), empty_bloom(self.spark))),
+                # sparse: bloom_update allocates a shard on its first
+                # digest; both probes read a missing shard as all-miss
+                (
+                    "bloom",
+                    bloom_update(fr.select("digest"), empty_frame(self.spark, BLOOM_SCHEMA)),
+                ),
             ],
         )
         self.wh.commit(0, {"seq_offset": 0, "n_pending": counts["frontier"]})

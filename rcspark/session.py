@@ -25,6 +25,19 @@ DRIVER_HEAP_SHARE = 0.5
 DRIVER_HEAP_CAP_GIB = 48
 DRIVER_HEAP_FALLBACK = "4g"  # RAM size unreadable
 
+# generated classes Spark keeps compiled (static; Spark's default is 100).
+# One crawl wave compiles about 166, so at 100 they evict one another
+# before the next wave reuses them; 2,000 holds a wave's working set with
+# room for the per-wave classes that inline the wave number.
+CODEGEN_CACHE_ENTRIES = 2000
+
+# Spark forks its Python workers from this daemon, which has the engine's
+# UDF modules and their numpy/pandas/pyarrow imports already loaded. The
+# workers' path names this package's root, so the daemon starts whatever
+# the driver's working directory is.
+PYTHON_DAEMON_MODULE = "rcspark.pydaemon"
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _mem_total_bytes() -> int | None:
     """Physical RAM: MemTotal from /proc/meminfo, else sysconf, else None."""
@@ -84,5 +97,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .getOrCreate()
     )

@@ -123,6 +123,13 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A `schema` frame with no rows and no partitions, so reading it runs
+    no task. (createDataFrame([], schema) splits an empty list over the
+    default parallelism and reads it back in Python workers.)"""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 class Warehouse:
     """Per-wave snapshot/append storage with atomic manifest commits."""
 
@@ -386,7 +393,7 @@ class Warehouse:
         """Latest-state table at `wave` (SNAPSHOT flavor)."""
         d = self._wave_dir(table, wave)
         if wave < 0 or not os.path.exists(d):
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         return self._read_dir(table, d, schema)
 
     def read_appends(self, table: str, through_wave: int, schema: T.StructType) -> DataFrame:
@@ -441,7 +448,7 @@ class Warehouse:
             if os.path.exists(self._wave_dir(table, w))
         ]
         if not dirs:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         if table in BUCKETED_TABLES:
             from functools import reduce
 
@@ -493,7 +500,7 @@ class Warehouse:
             if os.path.exists(self._delete_dir(table, kind, w))
         ]
         if not dirs:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         return self.spark.read.schema(schema).parquet(*dirs)
 
     def read_mor(
@@ -614,7 +621,7 @@ class SpecWarehouse(Warehouse):
         )
         residual = {k: v for k, v in prune.items() if k not in spec}
         if not leaf_dirs:  # fully pruned wave: zero dirs touched
-            return self.spark.createDataFrame([], schema), 0
+            return empty_frame(self.spark, schema), 0
         df = (
             self.spark.read.option("basePath", d)
             .schema(schema)
@@ -786,7 +793,7 @@ class HiddenPartWarehouse(EvoWarehouse):
             if os.path.isdir(p) and os.path.basename(p).startswith(f"{leaf}=")
         )
         if not leaf_dirs:
-            return self.spark.createDataFrame([], schema), 0
+            return empty_frame(self.spark, schema), 0
         read_schema = T.StructType(
             list(schema.fields)
             + [T.StructField(e["name"], T.StringType(), True) for e in hspec]

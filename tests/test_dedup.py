@@ -5,8 +5,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from rcspark.constants import BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES
+from rcspark.constants import BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES, BLOOM_SHARDS
 from rcspark.dedup import bloom_probe, bloom_update, empty_bloom, filter_unseen
+from rcspark.tables import BLOOM_SCHEMA, empty_frame
 
 
 def _digests(spark, urls):
@@ -88,3 +89,27 @@ def test_bloom_update_preserves_untouched_shards(spark):
     changed = [s for s in before if before[s] != after[s]]
     assert len(changed) == 1  # exactly the target shard mutated
     assert all(len(bytes(v)) == BLOOM_BITS_PER_SHARD // 8 for v in after.values())
+
+
+def test_filter_unseen_sparse_sketch_matches_full(spark):
+    """A sketch grown from an empty frame holds only the shards its digests
+    reached; a missing shard probes all-miss, so both probe paths return
+    the same rows over it as over the full sketch grown from empty_bloom."""
+    inserted = [f"http://h{i % 3}.example/p/{i}" for i in range(12)]
+    seen = _digests(spark, inserted).withColumn("wave", F.lit(0))
+    sparse = bloom_update(_digests(spark, inserted), empty_frame(spark, BLOOM_SCHEMA))
+    full = bloom_update(_digests(spark, inserted), empty_bloom(spark))
+    assert sparse.count() < BLOOM_SHARDS == full.count()
+
+    mixed = inserted[:6] + [f"http://fresh.example/z/{i}" for i in range(300)]
+    got = {}
+    for sketch_name, sketch in (("sparse", sparse), ("full", full)):
+        for probe, max_bytes in (("broadcast", None), ("cogroup", 0)):
+            held: list = []
+            kw = {} if max_bytes is None else {"broadcast_max_bytes": max_bytes}
+            out = filter_unseen(_digests(spark, mixed), sketch, seen, persisted_out=held, **kw)
+            got[sketch_name, probe] = sorted(r.url_canon for r in out.collect())
+            for h in held:
+                h.unpersist()
+    want = sorted(f"http://fresh.example/z/{i}" for i in range(300))
+    assert all(rows == want for rows in got.values()), {k: len(v) for k, v in got.items()}

@@ -1,8 +1,19 @@
-"""get_spark's resource defaults follow the host; the env vars override them."""
+"""get_spark's resource defaults follow the host; the env vars override
+them. Its Python daemon module imports from any working directory."""
 
 from __future__ import annotations
 
-from rcspark.session import DRIVER_HEAP_CAP_GIB, DRIVER_HEAP_FALLBACK, resource_defaults
+import os
+import subprocess
+import sys
+
+from rcspark.session import (
+    DRIVER_HEAP_CAP_GIB,
+    DRIVER_HEAP_FALLBACK,
+    PACKAGE_ROOT,
+    PYTHON_DAEMON_MODULE,
+    resource_defaults,
+)
 
 GIB = 1 << 30
 
@@ -21,3 +32,14 @@ def test_env_overrides_win():
     # an empty override is no override
     env = {"SPARK_GRAFT_CPUS": "", "RCSPARK_DRIVER_MEM": ""}
     assert resource_defaults(env, 8, 32 * GIB) == (8, "16g")
+
+
+def test_daemon_module_imports_from_any_cwd(tmp_path):
+    """Every Python worker forks from PYTHON_DAEMON_MODULE: if it fails to
+    import, no Python task runs. The workers' path holds PACKAGE_ROOT."""
+    env = {**os.environ, "PYTHONPATH": PACKAGE_ROOT}
+    r = subprocess.run(
+        [sys.executable, "-c", f"import {PYTHON_DAEMON_MODULE}"],
+        cwd=tmp_path, env=env, capture_output=True, text=True,
+    )
+    assert r.returncode == 0, r.stderr

@@ -1,17 +1,29 @@
 """The crawl wave's Spark cost scales with its rows: the sized seq fan-out,
-AQE-sized shard writes and a per-wave Spark job bound."""
+AQE-sized shard writes and a per-wave Spark job bound. Its fixed cost is
+paid once per session: a re-run wave compiles no new generated classes,
+missing tables read without running a task, and the Bloom sketch
+starts sparse."""
 
 from __future__ import annotations
 
 import os
 import random
+import shutil
 
 from pyspark.sql import functions as F
 
+from rcspark.constants import BLOOM_SHARDS
 from rcspark.fixtures import make_fixture
 from rcspark.run import CrawlEngine
 from rcspark.schedule import assign_global_seq, rank_within_budget, with_budget
-from rcspark.tables import N_SHARDS, SEEN_SCHEMA, Warehouse
+from rcspark.tables import (
+    BLOOM_SCHEMA,
+    CORPUS_SCHEMA,
+    FRONTIER_SCHEMA,
+    N_SHARDS,
+    SEEN_SCHEMA,
+    Warehouse,
+)
 
 from test_crawl_e2e import engine_inputs
 from test_robots_schedule import _frontier
@@ -37,6 +49,29 @@ def _marker_job_id(sc) -> int:
         return max(sc.statusTracker().getJobIdsForGroup("wave-cost-marker"))
     finally:
         sc.setJobGroup(None, None)
+
+
+def _tasks_in_jobs(sc, first: int, last: int) -> int:
+    """Tasks run by jobs first..last (inclusive). A job over zero
+    partitions takes a job id but has no stage."""
+    st = sc.statusTracker()
+    jobs = [st.getJobInfo(j) for j in range(first, last + 1)]
+    return sum(
+        st.getStageInfo(s).numTasks for j in jobs if j is not None for s in j.stageIds
+    )
+
+
+def _classes_compiled(sc) -> int:
+    """Generated classes the JVM has compiled so far; a hit in Spark's
+    codegen cache compiles nothing."""
+    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _small_crawl(spark, root: str) -> CrawlEngine:
+    fx = make_fixture(n_hosts=4, urls_per_host=15, link_fanout=5.0, seed=23)
+    web, corpus_src = engine_inputs(spark, fx)
+    return CrawlEngine(spark, root, web, corpus_src, fx.robots, fx.seeds, fx.allowed_hosts)
 
 
 def test_single_partition_seq_matches_and_runs_no_job(spark):
@@ -85,11 +120,7 @@ def test_bucketed_write_one_file_per_shard_dir(spark, tmp_path):
 
 def test_crawl_wave_job_bound(spark, tmp_path):
     sc = spark.sparkContext
-    fx = make_fixture(n_hosts=4, urls_per_host=15, link_fanout=5.0, seed=23)
-    web, corpus_src = engine_inputs(spark, fx)
-    eng = CrawlEngine(
-        spark, str(tmp_path / "wh"), web, corpus_src, fx.robots, fx.seeds, fx.allowed_hosts
-    )
+    eng = _small_crawl(spark, str(tmp_path / "wh"))
     held = sc._jsc.getPersistentRDDs().size()
     jobs = []
     for _ in range(2):
@@ -100,3 +131,45 @@ def test_crawl_wave_job_bound(spark, tmp_path):
     assert all(0 < n <= MAX_JOBS_PER_WAVE for n in jobs), jobs
     # each wave frees the rows it kept and the frames it persisted
     assert sc._jsc.getPersistentRDDs().size() == held
+
+
+def test_rerun_wave_compiles_no_new_classes(spark, tmp_path):
+    """The session's codegen cache holds a wave's generated classes: a wave
+    re-run from its snapshot, with identical plans, compiles none (at
+    Spark's default of 100 entries the crawl_drain wave compiled 167)."""
+    sc = spark.sparkContext
+    eng = _small_crawl(spark, str(tmp_path / "a"))
+    assert eng.run_wave() is not None  # bootstrap and wave 0
+    shutil.copytree(eng.wh.root, str(tmp_path / "b"))
+    first = eng.run_wave()
+    before = _classes_compiled(sc)
+    again = _small_crawl(spark, str(tmp_path / "b")).run_wave()
+    assert again == first
+    assert _classes_compiled(sc) - before == 0
+
+
+def test_empty_reads_have_no_partitions_and_start_no_job(spark, tmp_path):
+    sc = spark.sparkContext
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    before = _marker_job_id(sc)
+    empties = [
+        wh.read_snapshot("frontier_pending", 0, FRONTIER_SCHEMA),
+        wh.read_appends("corpus", 0, CORPUS_SCHEMA),
+    ]
+    assert [df.rdd.getNumPartitions() for df in empties] == [0, 0]
+    after = _marker_job_id(sc)
+    assert after - before - 1 == 0
+    assert [df.collect() for df in empties] == [[], []]
+    # collecting zero partitions takes a job id but runs no task
+    assert _tasks_in_jobs(sc, after + 1, _marker_job_id(sc) - 1) == 0
+    assert [df.schema for df in empties] == [FRONTIER_SCHEMA, CORPUS_SCHEMA]
+
+
+def test_bootstrap_bloom_holds_only_seed_shards(spark, tmp_path):
+    eng = _small_crawl(spark, str(tmp_path / "wh"))
+    eng._bootstrap()
+    seeds = eng.wh.read_snapshot("frontier_pending", 0, FRONTIER_SCHEMA).collect()
+    bloom = eng.wh.read_snapshot("bloom", 0, BLOOM_SCHEMA).collect()
+    shards = sorted(r.shard for r in bloom)
+    assert shards == sorted({r.digest % BLOOM_SHARDS for r in seeds})
+    assert 0 < len(shards) < BLOOM_SHARDS
