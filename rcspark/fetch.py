@@ -1,11 +1,9 @@
 """Fetch + outcome dispatch — SURVEY.md A10/A11/A12.
 
 In the sandbox (no network) a "fetch" is an equi-join of the scheduled
-frontier against the synthetic `web` table on url_canon — the same dataflow
-shape as the real thing, where this join is replaced by a `mapInArrow` batch
-HTTP fetcher per partition (the scheduled rows are already grouped by host
-and ordered by fetch_ms, which is exactly the order a per-host HTTP client
-would issue them in).
+frontier against the synthetic `web` table on url_canon (simulate_fetch).
+On a real cluster `fetch_http_arrow` hands each host-partition Arrow batch
+to `AsyncHttpTransport.fetch_many` in one call.
 
 Outcome classification mirrors Scrapy's downloader middlewares:
 - RETRY_STATUSES with retry_count < RETRY_TIMES → 'retry'
@@ -41,21 +39,22 @@ def fetch_http_arrow(
     pace: bool = False,
 ) -> DataFrame:
     """The real-cluster A10 fetcher: batched per-partition HTTP via
-    ``mapInArrow``-style pandas batches.
+    ``mapInPandas`` batches.
 
     `scheduled` rows arrive already grouped by host and ordered by
     fetch_ms (rank_within_budget + assign_global_seq emit them that way),
     which is exactly the order a per-host HTTP client issues requests in.
-    Each Arrow batch is fetched through `transport`, a callable
-    ``url_canon -> (status:int|None, redirect_to:str|None, body:bytes|None)``
-    — in production a pooled HTTP client (requests/aiohttp session per
-    executor via closure), in tests/sandbox a dict-backed fake. The
-    sandbox has no network, so the engine default stays `simulate_fetch`
-    (equi-join vs the web table); this function is the drop-in the real
-    cluster binds, with the same output contract.
+    Each Arrow batch is ONE call ``transport.fetch_many(urls, offsets_ms)``
+    returning, per URL in order,
+    ``(status:int|None, redirect_to:str|None, body:bytes|None)`` — in
+    production an `AsyncHttpTransport`, in tests any object with that
+    method. The sandbox has no network, so the engine default stays
+    `simulate_fetch` (equi-join vs the web table); this function is the
+    drop-in the real cluster binds, with the same output contract.
 
-    pace=True sleeps out each row's fetch_ms schedule inside the batch
-    (real politeness); OFF for tests/benchmarks (simulated clock).
+    pace=True sorts each batch by fetch_ms and passes those offsets, so
+    each request waits out its schedule (real politeness); OFF for
+    tests/benchmarks (simulated clock).
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -70,30 +69,12 @@ def fetch_http_arrow(
     )
 
     def run(batches):
-        import time as _t
-
-        fetch_many = getattr(transport, "fetch_many", None)
         for pdf in batches:
-            if pace and len(pdf) and "fetch_ms" in pdf:
+            offsets_ms = None
+            if pace and "fetch_ms" in pdf:
                 pdf = pdf.sort_values("fetch_ms").reset_index(drop=True)
-            t0 = _t.monotonic()
-            urls = pdf["url_canon"].tolist()
-            fms = pdf["fetch_ms"].tolist() if pace and "fetch_ms" in pdf else None
-            if fms is None and fetch_many is not None:
-                # pipelined batch path (AsyncHttpTransport): the whole
-                # host-partition batch runs concurrently on keep-alive
-                # connections; per-row pacing stays on the serial path
-                results = fetch_many(urls)
-            else:
-                results = []
-                for i, u in enumerate(urls):  # one iteration PER REQUEST (IO
-                    # dispatch, not a data transform — the data path stays
-                    # columnar; the pipelined transport batches instead)
-                    if fms is not None:
-                        delay = fms[i] / 1000.0 - (_t.monotonic() - t0)
-                        if delay > 0:
-                            _t.sleep(delay)
-                    results.append(transport(u))
+                offsets_ms = pdf["fetch_ms"].tolist()
+            results = transport.fetch_many(pdf["url_canon"].tolist(), offsets_ms)
             statuses = [r[0] for r in results]
             redirects = [r[1] for r in results]
             bodies = [r[2] for r in results]
@@ -106,133 +87,27 @@ def fetch_http_arrow(
     return by_host.mapInPandas(run, out_schema)
 
 
-class PooledHttpTransport:
-    """Production transport binding for fetch_http_arrow: stdlib
-    ``http.client`` with a per-process connection pool keyed by
-    (scheme, host, port) — keep-alive reuse, bounded body reads, no
-    redirect following (A12 is the ENGINE's job: the 3xx Location comes
-    back as `redirect_to` and re-enters discovery).
-
-    Picklable by construction: the live pool never crosses process
-    boundaries (__getstate__ drops it), each Spark python worker rebuilds
-    its own connections lazily — exactly one pool per executor process,
-    the per-host affinity coming from fetch_http_arrow's
-    repartition("host"). Network errors return (None, None, None) (the
-    classify_outcome 'failed' path) and evict the pooled connection.
-
-    Exercised for real in tests/test_fetch_arrow.py against an in-process
-    localhost HTTP server (the sandbox has no external network); an
-    aiohttp/h2 pipelined client is a drop-in with the same contract.
-    """
-
-    # max bytes drained PAST max_body to preserve keep-alive; beyond this
-    # the connection is closed and evicted instead (a multi-GB or endless
-    # body must not stall the worker just to save one TCP handshake)
-    DRAIN_BUDGET = 2 << 20
-
-    def __init__(self, timeout: float = 10.0, max_body: int = 8 << 20,
-                 user_agent: str = "rcspark/0.3", resolve=None):
-        """``resolve``: optional picklable callable (host, port) ->
-        (address, port) — the DNS/IP-pool seam. When it rewrites the
-        address, the request still carries the ORIGINAL Host header
-        (virtual-hosting semantics), which is also what lets tests serve a
-        many-host fixture web from one localhost server."""
-        self.timeout = timeout
-        self.max_body = max_body
-        self.user_agent = user_agent
-        self.resolve = resolve
-        self._pool: dict = {}
-
-    def __getstate__(self):
-        d = self.__dict__.copy()
-        d["_pool"] = {}
-        return d
-
-    def _conn(self, scheme: str, host: str, port: int):
-        import http.client
-
-        key = (scheme, host, port)
-        conn = self._pool.get(key)
-        if conn is None:
-            cls = (
-                http.client.HTTPSConnection
-                if scheme == "https"
-                else http.client.HTTPConnection
-            )
-            conn = cls(host, port, timeout=self.timeout)
-            self._pool[key] = conn
-        return conn
-
-    def __call__(self, url: str):
-        from urllib.parse import urlsplit
-
-        key = None
-        try:
-            sp = urlsplit(url)
-            if sp.scheme not in ("http", "https") or not sp.hostname:
-                return (None, None, None)
-            port = sp.port or (443 if sp.scheme == "https" else 80)
-            addr, aport = (
-                self.resolve(sp.hostname, port) if self.resolve else (sp.hostname, port)
-            )
-            key = (sp.scheme, addr, aport)
-            target = (sp.path or "/") + (f"?{sp.query}" if sp.query else "")
-            headers = {"User-Agent": self.user_agent, "Accept": "*/*"}
-            if (addr, aport) != (sp.hostname, port):
-                headers["Host"] = sp.netloc.rsplit("@", 1)[-1]
-            conn = self._conn(sp.scheme, addr, aport)
-            try:
-                conn.request("GET", target, headers=headers)
-                resp = conn.getresponse()
-            except Exception:
-                # stale keep-alive or first failure: one fresh-connection retry
-                conn.close()
-                self._pool.pop(key, None)
-                conn = self._conn(sp.scheme, addr, aport)
-                conn.request("GET", target, headers=headers)
-                resp = conn.getresponse()
-            body = resp.read(self.max_body)
-            # Drain a bounded tail so http.client can keep the connection
-            # alive — but only up to DRAIN_BUDGET past max_body. A hostile
-            # or endless body would otherwise stall this worker unboundedly
-            # (ADVICE r3); past the budget, drop the connection instead.
-            drained = 0
-            while drained < self.DRAIN_BUDGET:
-                chunk = resp.read(min(65536, self.DRAIN_BUDGET - drained))
-                if not chunk:
-                    break
-                drained += len(chunk)
-            if drained >= self.DRAIN_BUDGET and not resp.isclosed():
-                conn.close()
-                self._pool.pop(key, None)
-            status = int(resp.status)
-            redirect_to = (
-                resp.getheader("Location") if status in REDIRECT_STATUSES else None
-            )
-            return (status, redirect_to, bytes(body) if body else None)
-        except Exception:
-            stale = self._pool.pop(key, None) if key is not None else None
-            if stale is not None:
-                try:
-                    stale.close()
-                except Exception:
-                    pass
-            return (None, None, None)
-
-
 class AsyncHttpTransport:
     """Pipelined asyncio HTTP/1.1 + TLS transport — the production
     "aiohttp" seam (VERDICT r2/r3 'missing': async pipelining + TLS
     config) realized with the stdlib so it actually RUNS in this sandbox.
 
-    Contract: the same per-URL callable as PooledHttpTransport
-    (``url -> (status, redirect_to, body)``) plus a batch entry point
-    ``fetch_many(urls)`` that ``fetch_http_arrow`` uses when present: all
-    URLs of a host-partition batch are fetched concurrently over up to
-    ``concurrency`` keep-alive connections per (scheme, host, port) —
-    Scrapy's CONCURRENT_REQUESTS_PER_DOMAIN burst semantics, matching the
-    scheduler's slot_group bursts. Each worker owns one connection and
-    drains a shared queue, reconnecting once on a stale socket.
+    Contract: ``fetch_many(urls, offsets_ms=None)`` → one
+    ``(status, redirect_to, body)`` per URL, the call ``fetch_http_arrow``
+    makes per Arrow batch. All URLs of a host-partition batch are fetched
+    concurrently over up to ``concurrency`` keep-alive connections per
+    (scheme, host, port) — Scrapy's CONCURRENT_REQUESTS_PER_DOMAIN burst
+    semantics, matching the scheduler's slot_group bursts. Each worker
+    owns one connection and drains a shared queue in URL order,
+    reconnecting once on a stale socket. Network errors, timeouts,
+    malformed responses and a failing ``resolve`` come back as
+    ``(None, None, None)`` (the classify_outcome 'failed' path), never as
+    an exception.
+
+    ``resolve``: optional picklable callable (host, port) -> (address,
+    port) — the DNS/IP-pool seam. The request still carries the ORIGINAL
+    Host header (virtual hosting), which is also what lets tests serve a
+    many-host fixture web from one localhost server.
 
     TLS: https URLs are wrapped with a real ``ssl.SSLContext`` —
     certificate verification ON by default (``create_default_context``),
@@ -240,8 +115,8 @@ class AsyncHttpTransport:
     self-signed fixture), ``tls_insecure=True`` disables verification
     explicitly. Responses support Content-Length, chunked
     transfer-encoding, and close-delimited bodies; bodies are capped at
-    ``max_body`` with the same bounded-drain rule as the pooled transport
-    (past DRAIN_BUDGET the connection is dropped, not drained).
+    ``max_body``; past DRAIN_BUDGET more bytes the connection is dropped,
+    not drained (an endless body must not stall the worker).
 
     Picklable by construction: no loop, socket, or context crosses
     process boundaries — every ``fetch_many`` call runs its own
@@ -279,20 +154,23 @@ class AsyncHttpTransport:
             ctx.verify_mode = ssl.CERT_NONE
         return ctx
 
-    def __call__(self, url: str):
-        return self.fetch_many([url])[0]
-
-    def fetch_many(self, urls: list[str]):
+    def fetch_many(self, urls: list[str], offsets_ms: list[int] | None = None):
+        """One ``(status, redirect_to, body)`` per URL, in order. With
+        ``offsets_ms``, request i is not sent before ``offsets_ms[i]`` ms
+        after this call starts (politeness pacing); ``timeout`` counts from
+        the send, not from the wait."""
         import asyncio
 
         if not urls:
             return []
-        return asyncio.run(self._run(urls))
+        return asyncio.run(self._run(urls, offsets_ms))
 
-    async def _run(self, urls: list[str]):
+    async def _run(self, urls: list[str], offsets_ms: list[int] | None):
         import asyncio
         from urllib.parse import urlsplit
 
+        loop = asyncio.get_running_loop()
+        start = loop.time()
         results: list = [(None, None, None)] * len(urls)
         groups: dict = {}
         for i, url in enumerate(urls):
@@ -307,9 +185,10 @@ class AsyncHttpTransport:
 
         async def run_group(key, items):
             scheme, host, port = key
-            addr, aport = (
-                self.resolve(host, port) if self.resolve else (host, port)
-            )
+            try:
+                addr, aport = self.resolve(host, port) if self.resolve else (host, port)
+            except Exception:
+                return  # unresolvable: this host's results stay (None, None, None)
             queue: asyncio.Queue = asyncio.Queue()
             for item in items:
                 queue.put_nowait(item)
@@ -333,6 +212,10 @@ class AsyncHttpTransport:
                             i, sp = queue.get_nowait()
                         except asyncio.QueueEmpty:
                             break
+                        if offsets_ms is not None:
+                            delay = start + offsets_ms[i] / 1000.0 - loop.time()
+                            if delay > 0:
+                                await asyncio.sleep(delay)
                         for attempt in (0, 1):  # one stale-socket retry
                             try:
                                 if reader is None:
@@ -359,9 +242,7 @@ class AsyncHttpTransport:
             n_workers = min(self.concurrency, len(items))
             await asyncio.gather(*[worker() for _ in range(n_workers)])
 
-        import asyncio as _a
-
-        await _a.gather(*[run_group(k, v) for k, v in groups.items()])
+        await asyncio.gather(*[run_group(k, v) for k, v in groups.items()])
         return results
 
     async def _request(self, reader, writer, sp, host):

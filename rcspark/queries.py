@@ -5681,7 +5681,7 @@ def crawl_mirror_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (CDNs, shared hosting) must share ONE politeness budget, or a thousand
 # vanity domains on one box turn the per-host budget into a DoS.  Hosts
 # resolve deterministically to a synthetic IP pool (the resolve seam of
-# fetch.PooledHttpTransport is where real DNS binds); the wave keeps the
+# fetch.AsyncHttpTransport is where real DNS binds); the wave keeps the
 # top-B URLs per IP.  [U scrapy/core/downloader/__init__.py — per-slot
 # concurrency, ip_concurrency]
 # =============================================================================
@@ -5718,7 +5718,7 @@ def crawl_ip_politeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break), emitting how many hosts share each IP. Scale shape: same
     salted two-phase top-k as crawl_schedule applies when one IP fronts a
     mega-CDN — here the plain window states the semantics; the resolve
-    seam in fetch.PooledHttpTransport is where production DNS binds."""
+    seam in fetch.AsyncHttpTransport is where production DNS binds."""
     orders = load(spark, sf_dir, "orders")
     from .datapipe.hashing import digest60 as d60
 
@@ -9361,7 +9361,7 @@ def img_thumbs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =============================================================================
 # A10 real-HTTP transport parity, driver-gated (VERDICT r3 item 8)
 # =============================================================================
-# The PooledHttpTransport binding was pytest-only (tests/test_fetch_arrow).
+# The real HTTP transport would otherwise be pytest-only (tests/test_fetch_arrow).
 # This query runs the REAL transport + fetch_http_arrow over a live
 # in-process HTTP server whose every response is a pure function of the
 # request path — which is exactly what lets the DuckDB oracle restate the
@@ -9391,7 +9391,7 @@ def img_thumbs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def crawl_fetch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 over real HTTP: schedule derived from `part`, fetched through
-    the production PooledHttpTransport (keep-alive pool, Host-header
+    the production AsyncHttpTransport (keep-alive connections, Host-header
     virtual hosting, resolve seam pointing every fixture host at the
     in-process server), classified by the engine's classify_outcome. The
     result is materialized (localCheckpoint) while the server lives, then
@@ -9399,7 +9399,7 @@ def crawl_fetch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-    from .fetch import PooledHttpTransport, fetch_http_arrow
+    from .fetch import AsyncHttpTransport, fetch_http_arrow
 
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
@@ -9442,7 +9442,7 @@ def crawl_fetch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("fetch_ms"),
         F.lit(0).alias("retry_count"),
     )
-    tr = PooledHttpTransport(
+    tr = AsyncHttpTransport(
         timeout=10.0, resolve=lambda host, p, _port=port: ("127.0.0.1", _port)
     )
     fetched = classify_outcome(fetch_http_arrow(sched, tr))

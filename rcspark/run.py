@@ -176,12 +176,12 @@ class CrawlEngine:
         transport=None,
         store_format: str | None = None,
     ):
-        """``transport``: optional real-fetch binding (see
-        fetch.PooledHttpTransport). None → the sandbox default, an
-        equi-join against the `web` table (simulate_fetch). With a
-        transport the wave fetch runs through fetch_http_arrow's
-        per-host Arrow batches instead — same output contract, pinned
-        equal end-to-end in tests/test_fetch_arrow.py.
+        """``transport``: optional real-fetch binding, an object with
+        ``fetch_many(urls, offsets_ms)`` (fetch.AsyncHttpTransport).
+        None → the sandbox default, an equi-join against the `web` table
+        (simulate_fetch). With a transport the wave fetch runs through
+        fetch_http_arrow's per-host Arrow batches instead — same output
+        contract, pinned equal end-to-end in tests/test_fetch_arrow.py.
 
         ``store_format``: optional A16 convert-on-store format for corpus
         images ('png' — multimodal.convert_images); None stores fetched

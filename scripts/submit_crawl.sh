@@ -4,7 +4,8 @@
 # executors"). In the sandbox this still runs local[...]; on a real cluster
 # point --master at YARN/K8s and the same zip rides along unchanged.
 #
-# Usage: scripts/submit_crawl.sh [cores] [extra spark-submit args...]
+# Usage: scripts/submit_crawl.sh [cores] [spark-submit args...] APP.py [app args...]
+# APP.py is the driver program, e.g. one that builds a CrawlEngine and runs it.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -29,4 +30,4 @@ exec spark-submit \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
   --conf spark.driver.memory="${RCSPARK_DRIVER_MEM:-48g}" \
   --py-files "$ZIP" \
-  "$@" scripts/dev_e2e.py
+  "$@"
