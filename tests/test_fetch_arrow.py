@@ -119,43 +119,75 @@ def _schedule(spark, rows):
     ).withColumn("priority", F.lit(0)).withColumn("depth", F.lit(0)).coalesce(1)
 
 
-def test_async_transport_real_requests(spark):
+def _expected_rows(base, n_ok):
+    return sorted(
+        [(f"{base}/ok/{i}", 200, None, f"<title>page {i}</title>".encode(), "fetched")
+         for i in range(n_ok)]
+        + [(f"{base}/redir", 301, "/ok/0", None, "redirect"),
+           (f"{base}/retry", 503, None, None, "retry"),
+           (f"{base}/missing", 404, None, None, "failed"),
+           ("not-a-url", None, None, None, "failed")]
+    )
+
+
+def _fetched_rows(spark, rows, transport):
+    out = classify_outcome(fetch_http_arrow(_schedule(spark, rows), transport))
+    return sorted(
+        (r["url_canon"], r["status"], r["redirect_to"],
+         bytes(r["body"]) if r["body"] is not None else None, r["result"])
+        for r in out.collect()
+    )
+
+
+def _probe_rows(base, n_ok, step_ms):
+    return (
+        [(f"{base}/ok/{i}", "127.0.0.1", i * step_ms, 0) for i in range(n_ok)]
+        + [(f"{base}/redir", "127.0.0.1", n_ok * step_ms, 0),
+           (f"{base}/retry", "127.0.0.1", n_ok * step_ms + 10, 0),
+           (f"{base}/missing", "127.0.0.1", n_ok * step_ms + 20, 0),
+           ("not-a-url", "127.0.0.1", n_ok * step_ms + 30, 0)]
+    )
+
+
+def test_pooled_http_transport_real_requests(spark):
     """The production transport against a real in-process HTTP server,
     through fetch_http_arrow's Arrow batches: statuses, redirect Location,
     bodies and the 404 / unparseable 'failed' classes come back as the
-    literal expected rows, and the one host's batch fans out over 2 to
-    `concurrency` keep-alive connections — far fewer than requests."""
+    literal expected rows, and its keep-alive connection pool is reused —
+    connections opened << requests served."""
     from rcspark.fetch import AsyncHttpTransport
 
     srv, stats = _start_server()
     try:
         base = f"http://127.0.0.1:{srv.server_address[1]}"
-        rows = (
-            [(f"{base}/ok/{i}", "127.0.0.1", 0, 0) for i in range(30)]
-            + [(f"{base}/redir", "127.0.0.1", 0, 0),
-               (f"{base}/retry", "127.0.0.1", 0, 0),
-               (f"{base}/missing", "127.0.0.1", 0, 0),
-               ("not-a-url", "127.0.0.1", 0, 0)]
-        )
-        out = classify_outcome(fetch_http_arrow(
-            _schedule(spark, rows), AsyncHttpTransport(timeout=5.0, concurrency=4)
-        ))
-        got = sorted(
-            (r["url_canon"], r["status"], r["redirect_to"],
-             bytes(r["body"]) if r["body"] is not None else None, r["result"])
-            for r in out.collect()
-        )
-        expected = sorted(
-            [(f"{base}/ok/{i}", 200, None, f"<title>page {i}</title>".encode(), "fetched")
-             for i in range(30)]
-            + [(f"{base}/redir", 301, "/ok/0", None, "redirect"),
-               (f"{base}/retry", 503, None, None, "retry"),
-               (f"{base}/missing", 404, None, None, "failed"),
-               ("not-a-url", None, None, None, "failed")]
-        )
-        assert got == expected
+        got = _fetched_rows(spark, _probe_rows(base, 20, 10),
+                            AsyncHttpTransport(timeout=5.0))
+        assert got == _expected_rows(base, 20)
+        # 23 requests over a handful of pooled connections, not one each
+        assert stats["conns"] < 23, stats["conns"]
+    finally:
+        srv.shutdown()
+
+
+def test_async_transport_matches_pooled_over_real_http(spark):
+    """Fanning one host's batch over `concurrency` keep-alive connections
+    yields exactly the rows of the same batch fetched serially over one
+    pooled connection (concurrency=1), and the fan-out really happens:
+    2 to `concurrency` connections for the burst, 1 for the serial run."""
+    from rcspark.fetch import AsyncHttpTransport
+
+    srv, stats = _start_server()
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        rows = _probe_rows(base, 30, 0)
+        wide = _fetched_rows(spark, rows, AsyncHttpTransport(timeout=5.0, concurrency=4))
+        wide_conns, stats["conns"] = stats["conns"], 0
+        serial = _fetched_rows(spark, rows, AsyncHttpTransport(timeout=5.0, concurrency=1))
+        serial_conns = stats["conns"]
+        assert wide == serial == _expected_rows(base, 30)
         # 33 requests; up to 2 stale-socket reconnects on top of the burst width
-        assert 2 <= stats["conns"] <= 4 + 2 < 33, stats["conns"]
+        assert 2 <= wide_conns <= 4 + 2 < 33, wide_conns
+        assert 1 <= serial_conns <= 1 + 2, serial_conns
     finally:
         srv.shutdown()
 
