@@ -32,11 +32,6 @@ XXHASH_SEED = 42           # Spark builtin xxhash64 default seed
 BLOOM_SHARDS = 32          # local default; size for 10^10: see dedup.py docs
 BLOOM_BITS_PER_SHARD = 1 << 20   # 128 KiB/shard locally
 BLOOM_NUM_HASHES = 7
-# filter_unseen probes via driver broadcast while the whole sketch fits
-# comfortably beside the driver/executor heaps; past this it auto-switches
-# to the shuffled cogroup probe (one shard bitmap per task). 512 MiB keeps
-# the broadcast far below typical 4-8 GiB executor memory at 10^10 URLs.
-BLOOM_BROADCAST_MAX_BYTES = 512 << 20
 
 # --------------------------------------------------------------------------
 # Politeness / scheduling (SURVEY.md A5, A6)

@@ -21,10 +21,13 @@ fp in buckets i1, i2 — NO false negatives for inserted keys; relocation
 (cuckoo kicking) bounds insert time; a full table raises (size shards for
 ≤ 95% load, as the Bloom sizing note does).
 
-The driver-facing dedup contract is identical to dedup.filter_unseen: a
-`maybe_seen` pre-filter plus the exact anti-join backstop, so either
-sketch can back A4. tests/test_cuckoo.py pins no-false-negative, FPR,
-and delete behavior.
+The driver-facing dedup contract is identical to dedup.filter_unseen, and
+so is the code: the shard column, the broadcast probe scaffold
+(dedup.probe_broadcast, fed this module's per-shard probe) and the exact
+anti-join backstop (dedup.anti_join_backstop) come from rcspark.dedup, so
+either sketch can back A4. Only the sketch format, its update and delete
+live here. tests/test_cuckoo.py pins no-false-negative, FPR, and delete
+behavior.
 """
 
 from __future__ import annotations
@@ -36,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .constants import BLOOM_SHARDS
+from .dedup import anti_join_backstop, probe_broadcast, shard_col
 from .xxh import splitmix64
 
 NBUCKETS = 1 << 13  # per shard: 8192 buckets × 4 slots × 2B = 64 KiB
@@ -171,10 +175,6 @@ def _delete_batch(table: np.ndarray, digests: np.ndarray) -> int:
     return removed
 
 
-def shard_col(digest):
-    return F.pmod(digest, F.lit(BLOOM_SHARDS)).cast("int")
-
-
 def empty_cuckoo(spark) -> DataFrame:
     rows = [
         (s, bytes(NBUCKETS * SLOTS * 2), NBUCKETS, 0) for s in range(BLOOM_SHARDS)
@@ -248,41 +248,18 @@ def cuckoo_delete(del_digests: DataFrame, cuckoo: DataFrame) -> DataFrame:
     )
 
 
+def _cuckoo_probe_shard(row, digests: np.ndarray) -> np.ndarray:
+    table = np.frombuffer(row["table"], dtype=np.uint16).reshape(row["nbuckets"], SLOTS)
+    return _probe_batch(table, digests)
+
+
 def cuckoo_probe_broadcast(
     candidates: DataFrame, cuckoo: DataFrame, resources_out: list | None = None
 ) -> DataFrame:
-    """candidates(digest, ...) → + maybe_seen via broadcast shard tables and
-    a scalar Arrow UDF (only the digest column crosses to Python — same
-    rationale as dedup.bloom_probe_broadcast). The Broadcast handle lands
-    in `resources_out` for post-action cleanup."""
-    from pyspark.sql.functions import pandas_udf
-
-    spark = candidates.sparkSession
-    shards = {
-        r["shard"]: (bytes(r["table"]), int(r["nbuckets"])) for r in cuckoo.collect()
-    }
-    bc = spark.sparkContext.broadcast(shards)
-    if resources_out is not None:
-        resources_out.append(bc)
-
-    @pandas_udf("boolean")
-    def probe(digest: pd.Series) -> pd.Series:
-        sh = bc.value
-        d = digest.to_numpy()
-        out = np.zeros(len(d), dtype=bool)
-        shard_of = d % BLOOM_SHARDS
-        for s in np.unique(shard_of):
-            ent = sh.get(int(s))
-            if ent is None:
-                continue
-            raw, nb = ent
-            mask = shard_of == s
-            out[mask] = _probe_batch(
-                np.frombuffer(raw, dtype=np.uint16).reshape(nb, SLOTS), d[mask]
-            )
-        return pd.Series(out)
-
-    return candidates.withColumn("maybe_seen", probe(F.col("digest")))
+    """dedup.probe_broadcast over the cuckoo sketch: candidates(digest,
+    ...) → + maybe_seen. The Broadcast handle lands in `resources_out`
+    for post-action cleanup."""
+    return probe_broadcast(candidates, cuckoo, _cuckoo_probe_shard, resources_out)
 
 
 def filter_unseen_cuckoo(
@@ -292,19 +269,9 @@ def filter_unseen_cuckoo(
     persisted_out: list | None = None,
 ) -> DataFrame:
     """Drop-in alternative to dedup.filter_unseen backed by the cuckoo
-    sketch: probe pre-filter + exact anti-join backstop. Persisted frame
-    and Broadcast handle land in `persisted_out` (both expose unpersist())
-    so long driver sessions can release them after the wave's actions."""
-    from pyspark.storagelevel import StorageLevel
-
-    probed = cuckoo_probe_broadcast(
-        candidates, cuckoo, resources_out=persisted_out
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_out is not None:
-        persisted_out.append(probed)
-    fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    survived = maybe.join(
-        seen.select("digest", "url_canon"), on=["digest", "url_canon"], how="left_anti"
-    )
-    return fresh.unionByName(survived)
+    sketch: the same broadcast probe and exact anti-join backstop.
+    Persisted frame and Broadcast handle land in `persisted_out` (both
+    expose unpersist()) so long driver sessions can release them after the
+    wave's actions."""
+    probed = cuckoo_probe_broadcast(candidates, cuckoo, resources_out=persisted_out)
+    return anti_join_backstop(probed, seen, persisted_out)

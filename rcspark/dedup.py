@@ -3,46 +3,45 @@
 Two-stage, as mandated by the north_star ("partitioned Bloom/cuckoo URL-seen
 filter implemented as vectorized Arrow UDFs over xxhash64 digests"):
 
-1. **Partitioned Bloom probe** — the persistent `bloom` table holds one
-   bitmap per shard (shard = pmod(digest, P)). Candidate digests are
-   cogrouped with their shard's bitmap and probed in a single vectorized
-   numpy pass (`applyInPandas`, Arrow-batched — no per-row Python). A miss
-   is *definitely new*; only hits ("maybe seen") continue to stage 2.
+1. **Partitioned sketch probe** — the persistent `bloom` table holds one
+   bitmap per shard (shard = pmod(digest, P)). The shard bitmaps are
+   collected and broadcast, and a scalar pandas UDF probes each Arrow batch
+   of candidate digests shard by shard in vectorized numpy passes (no
+   per-row Python). Only the `digest` column crosses the JVM↔Python
+   boundary and nothing is shuffled. A miss is *definitely new*; only hits
+   ("maybe seen") continue to stage 2.
 2. **Exact anti-join backstop** — maybe-seen candidates `left_anti`-join the
-   exact `seen` table on (digest, url_canon) to kill Bloom false positives.
+   exact `seen` table on (digest, url_canon) to kill sketch false positives.
    Joining on url_canon too protects the 10^10-scale case where 64-bit
    digest collisions have expectation ≈ 2.7 (SURVEY.md §1.2).
 
+rcspark.cuckoo backs the same two stages with a cuckoo sketch; both use
+`probe_broadcast` and `anti_join_backstop` from here.
+
 Sizing for a 10^10-URL frontier: P = 4096 shards × m = 3 GiB·8/4096 ≈
 6.1e7 bits/shard at ~9.6 bits/element gives FPR ≈ 1%; each shard bitmap is
-~7.3 MB — comfortably inside an executor grouped-map task, and stage 2 then
-anti-joins only ~1% of candidates instead of all of them. Locally we run
-P=32, m=2^20 (constants.py).
+~7.3 MB, and stage 2 then anti-joins only ~1% of candidates instead of all
+of them. Locally we run P=32, m=2^20 (constants.py): bloom_update allocates
+every shard at that size, so a sketch is at most 4 MiB and broadcasts
+cheaply. A 3 GiB sketch would not: that scale needs a shard-partitioned
+probe (each task holding one shard bitmap) again — see TODO.md.
 
 The Bloom update is itself a cogrouped map: new digests are OR-ed into their
 shard's bitmap and the sketch's shards are rewritten as the wave's snapshot
 — the classic "sketch as data, not as service" Spark pattern. The sketch is
 sparse: a shard's bitmap is allocated with its first digest, and a missing
 shard probes all-miss. The crawl engine grows its sketch from an empty
-frame, so its bloom table holds only the shards its URLs reached, and
-bloom_bytes() is an upper bound on its size.
+frame, so its bloom table holds only the shards its URLs reached.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .constants import (
-    BLOOM_BITS_PER_SHARD,
-    BLOOM_BROADCAST_MAX_BYTES,
-    BLOOM_NUM_HASHES,
-    BLOOM_SHARDS,
-)
+from .constants import BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES, BLOOM_SHARDS
 from .tables import BLOOM_SCHEMA
 from .xxh import splitmix64
 
@@ -74,14 +73,6 @@ def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
     np.bitwise_or.at(bits, byte_idx, masks)
 
 
-def bloom_bytes() -> int:
-    """Size of the sketch empty_bloom allocates: every shard at the default
-    nbits. bloom_update keeps a shard's nbits and allocates a missing shard
-    at the default, so this bounds any sketch grown from empty_bloom (equal)
-    or from an empty frame (sparse: at most this)."""
-    return BLOOM_SHARDS * BLOOM_BITS_PER_SHARD // 8
-
-
 def empty_bloom(spark) -> DataFrame:
     """Every shard with an all-zero bitmap, built from a driver-side list
     (read back in Python workers). The crawl engine starts from an empty
@@ -93,32 +84,26 @@ def empty_bloom(spark) -> DataFrame:
     return spark.createDataFrame(rows, BLOOM_SCHEMA)
 
 
-def bloom_probe_broadcast(
-    candidates: DataFrame, bloom: DataFrame, resources_out: list | None = None
+def probe_broadcast(
+    candidates: DataFrame, sketch: DataFrame, probe_shard, resources_out: list | None = None
 ) -> DataFrame:
     """candidates(digest, ...) → same rows + boolean `maybe_seen`, via a
-    BROADCAST of the shard bitmaps and a scalar Arrow-batched pandas UDF.
+    BROADCAST of the sketch's shard rows and a scalar Arrow-batched pandas
+    UDF: only the `digest` column crosses the JVM↔Python boundary.
 
-    Preferred probe path while the sketch is small: only the `digest`
-    column crosses the JVM↔Python boundary (the cogroup variant ships
-    every candidate column through Arrow and pays a shuffle).
-    `filter_unseen` auto-switches to `bloom_probe` once the measured
-    sketch size passes BLOOM_BROADCAST_MAX_BYTES.
+    `probe_shard(row, digests)` takes one shard's sketch row and that
+    shard's digests (int64 array) and returns their maybe-seen flags; it
+    is pickled with the UDF. A shard with no sketch row probes all-miss.
 
     The Broadcast handle is appended to `resources_out` when given (it has
     an `unpersist()` like a persisted DataFrame); callers should release
     it after the wave's actions complete or a long driver session
     accumulates broadcast blocks.
     """
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    spark = candidates.sparkSession
-    shards: dict[int, tuple[bytes, int, int]] = {
-        r["shard"]: (bytes(r["bits"]), int(r["nbits"]), int(r["k"]))
-        for r in bloom.collect()
-    }
-    bc = spark.sparkContext.broadcast(shards)
+    shards = {r["shard"]: r for r in sketch.collect()}
+    bc = candidates.sparkSession.sparkContext.broadcast(shards)
     if resources_out is not None:
         resources_out.append(bc)
 
@@ -127,53 +112,27 @@ def bloom_probe_broadcast(
         sh = bc.value
         d = digest.to_numpy()
         out = np.zeros(len(d), dtype=bool)
-        shard_of = (d % BLOOM_SHARDS + BLOOM_SHARDS) % BLOOM_SHARDS
+        shard_of = d % BLOOM_SHARDS  # numpy's % takes the divisor's sign: pmod
         for s in np.unique(shard_of):
-            ent = sh.get(int(s))
-            if ent is None:
-                continue
-            bits_b, nbits, k = ent
-            mask = shard_of == s
-            pos = _positions(d[mask], nbits, k)
-            out[mask] = _probe_bits(np.frombuffer(bits_b, dtype=np.uint8), pos)
+            row = sh.get(int(s))
+            if row is not None:
+                mask = shard_of == s
+                out[mask] = probe_shard(row, d[mask])
         return pd.Series(out)
 
     return candidates.withColumn("maybe_seen", probe(F.col("digest")))
 
 
-def bloom_probe(candidates: DataFrame, bloom: DataFrame) -> DataFrame:
-    """candidates(digest, ...) → same rows + boolean `maybe_seen`.
+def _bloom_probe_shard(row, digests: np.ndarray) -> np.ndarray:
+    bits = np.frombuffer(row["bits"], dtype=np.uint8)
+    return _probe_bits(bits, _positions(digests, row["nbits"], row["k"]))
 
-    Cogroup by shard; one Arrow batch per shard probes all its digests in
-    one vectorized pass. A shard with no bloom row (fresh filter) probes
-    all-False. (Scale fallback for a filter too big to broadcast — see
-    bloom_probe_broadcast for the default path.)
-    """
-    from pyspark.sql import types as T
 
-    cand = candidates.withColumn("_shard", shard_col(F.col("digest")))
-    # (copy — StructType.add mutates the DataFrame's cached schema in place)
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return left.assign(maybe_seen=pd.Series([], dtype=bool))
-        if right.empty:
-            return left.assign(maybe_seen=False)
-        bits = np.frombuffer(right["bits"].iloc[0], dtype=np.uint8)
-        nbits = int(right["nbits"].iloc[0])
-        k = int(right["k"].iloc[0])
-        pos = _positions(left["digest"].to_numpy(), nbits, k)
-        return left.assign(maybe_seen=_probe_bits(bits, pos))
-
-    return (
-        cand.groupBy("_shard")
-        .cogroup(bloom.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-        .drop("_shard")
-    )
+def bloom_probe_broadcast(
+    candidates: DataFrame, bloom: DataFrame, resources_out: list | None = None
+) -> DataFrame:
+    """probe_broadcast over the Bloom sketch."""
+    return probe_broadcast(candidates, bloom, _bloom_probe_shard, resources_out)
 
 
 def bloom_update(new_digests: DataFrame, bloom: DataFrame) -> DataFrame:
@@ -208,58 +167,23 @@ def bloom_update(new_digests: DataFrame, bloom: DataFrame) -> DataFrame:
     )
 
 
-def filter_unseen(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    seen: DataFrame,
-    persisted_out: list | None = None,
-    broadcast_max_bytes: int = BLOOM_BROADCAST_MAX_BYTES,
-    sketch_bytes: int | None = None,
+def anti_join_backstop(
+    probed: DataFrame, seen: DataFrame, persisted_out: list | None = None
 ) -> DataFrame:
-    """Rows of `candidates` whose (digest, url_canon) is NOT in the seen set.
-
-    Bloom-negative rows skip the join entirely; bloom-positive rows are
-    verified with an exact left_anti join (false-positive kill). Columns of
-    `candidates` pass through unchanged.
-
-    Probe-path auto-switch (VERDICT r1 next-round #7): the sketch size is
-    measured from the bloom table itself (sum of nbits — a sub-second agg
-    over ≤ BLOOM_SHARDS rows). Under `broadcast_max_bytes` the bitmaps are
-    broadcast and probed with a scalar pandas UDF (no shuffle); past it —
-    a 10^10-URL filter is a few GiB — the cogrouped per-shard probe runs
-    instead, so no caller needs to know how big the filter has grown. A
-    caller that already knows a bound on the size (the crawl engine's
-    sketch is at most bloom_bytes()) passes `sketch_bytes` and skips that
-    agg.
+    """Rows of `probed` (candidates + `maybe_seen`) whose (digest,
+    url_canon) is NOT in `seen`, without `maybe_seen`: sketch misses pass
+    straight through, sketch hits are verified with an exact left_anti
+    join (false-positive kill).
 
     The probed frontier is persisted before the fresh/maybe fan-out —
-    without it, Spark recomputes the whole Bloom probe subtree once per
-    union branch (verified via .explain). At 10^10 scale this is the
-    wave's materialization point (the frontier table write); locally
-    MEMORY_AND_DISK stands in. Callers can collect the handle via
-    `persisted_out` to unpersist after the wave (broadcast handles are
-    appended there too — both expose unpersist()).
+    without it, Spark recomputes the whole probe subtree once per union
+    branch (verified via .explain). At 10^10 scale this is the wave's
+    materialization point (the frontier table write); locally
+    MEMORY_AND_DISK stands in. The handle lands in `persisted_out` when
+    given, to unpersist after the wave.
     """
     from pyspark.storagelevel import StorageLevel
 
-    # persist the sketch BEFORE the sizing agg: without it the whole
-    # upstream bloom_update cogroup evaluates twice — once for sum(nbits),
-    # once for the broadcast collect (measured: the double evaluation was
-    # most of crawl_bloom_dedup's wall time, VERDICT r2 next-round #4)
-    bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_out is not None:
-        persisted_out.append(bloom)
-    if sketch_bytes is None:
-        sketch_bytes = (bloom.agg(F.sum("nbits").alias("b")).first()["b"] or 0) // 8
-    if sketch_bytes <= broadcast_max_bytes:
-        probed = bloom_probe_broadcast(candidates, bloom, resources_out=persisted_out)
-        if persisted_out is None:
-            # the probe's bitmap now lives in its own broadcast — the bloom
-            # DataFrame cache has no further reader, and no caller holds a
-            # handle to release it later (ADVICE r3 leak)
-            bloom.unpersist()
-    else:
-        probed = bloom_probe(candidates, bloom)
     probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
     if persisted_out is not None:
         persisted_out.append(probed)
@@ -269,3 +193,18 @@ def filter_unseen(
         seen.select("digest", "url_canon"), on=["digest", "url_canon"], how="left_anti"
     )
     return fresh.unionByName(survived)
+
+
+def filter_unseen(
+    candidates: DataFrame,
+    bloom: DataFrame,
+    seen: DataFrame,
+    persisted_out: list | None = None,
+) -> DataFrame:
+    """Rows of `candidates` whose (digest, url_canon) is NOT in the seen set:
+    the Bloom broadcast probe, then the exact anti-join backstop. Columns
+    of `candidates` pass through unchanged. The probe's Broadcast handle
+    and the persisted probed frame land in `persisted_out` (both expose
+    unpersist())."""
+    probed = bloom_probe_broadcast(candidates, bloom, resources_out=persisted_out)
+    return anti_join_backstop(probed, seen, persisted_out)

@@ -98,9 +98,11 @@ class AsyncHttpTransport:
     concurrently over up to ``concurrency`` keep-alive connections per
     (scheme, host, port) — Scrapy's CONCURRENT_REQUESTS_PER_DOMAIN burst
     semantics, matching the scheduler's slot_group bursts. Each worker
-    owns one connection and drains a shared queue in URL order,
-    reconnecting once on a stale socket. Network errors, timeouts,
-    malformed responses and a failing ``resolve`` come back as
+    owns one connection and drains a shared queue in URL order. A request
+    that fails on a reused keep-alive connection (a stale socket) is sent
+    once more on a fresh one; a failure on a fresh connection is not
+    retried, so a stalled URL costs one ``timeout``. Network errors,
+    timeouts, malformed responses and a failing ``resolve`` come back as
     ``(None, None, None)`` (the classify_outcome 'failed' path), never as
     an exception.
 
@@ -216,7 +218,12 @@ class AsyncHttpTransport:
                             delay = start + offsets_ms[i] / 1000.0 - loop.time()
                             if delay > 0:
                                 await asyncio.sleep(delay)
-                        for attempt in (0, 1):  # one stale-socket retry
+                        while True:
+                            # a kept-alive socket the server has since closed
+                            # fails the next request: retry that once on a
+                            # fresh connection; any failure on a fresh one is
+                            # the URL's own and leaves (None, None, None)
+                            reused = reader is not None
                             try:
                                 if reader is None:
                                     reader, writer = await connect()
@@ -233,8 +240,8 @@ class AsyncHttpTransport:
                                 if writer is not None:
                                     writer.close()
                                 reader = writer = None
-                                if attempt == 1:
-                                    break  # results[i] stays (None, None, None)
+                                if not reused:
+                                    break
                 finally:
                     if writer is not None:
                         writer.close()

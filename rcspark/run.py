@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import constants as C
-from .dedup import bloom_bytes, bloom_update, filter_unseen
+from .dedup import bloom_update, filter_unseen
 from .fetch import classify_outcome, simulate_fetch
 from .parse import parse_page
 from .robots import apply_robots_gate, robots_table
@@ -345,9 +345,7 @@ class CrawlEngine:
         disc = disc.withColumn("_rn", F.row_number().over(w_first)).filter(
             F.col("_rn") == 1
         )
-        new_urls = filter_unseen(
-            disc, bloom, seen, persisted_out=gc_dfs, sketch_bytes=bloom_bytes()
-        ).select(
+        new_urls = filter_unseen(disc, bloom, seen, persisted_out=gc_dfs).select(
             "url_canon",
             "digest",
             "host",

@@ -30,6 +30,7 @@ import json
 import os
 import re
 import shutil
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -229,18 +230,26 @@ class Warehouse:
     def _wave_dir(self, table: str, wave: int) -> str:
         return os.path.join(self.root, table, f"wave={wave:06d}")
 
+    def _write_atomic(self, final: str, fill: Callable[[str], None]) -> None:
+        """Make directory `final` appear whole or not at all: `fill(tmp)`
+        writes everything, sidecars included, into a temp dir that is then
+        renamed to `final`. Both paths are cleared first — what they hold
+        is garbage from a killed, uncommitted run."""
+        tmp = final + ".inprogress"
+        for p in (final, tmp):
+            if os.path.exists(p):
+                shutil.rmtree(p)
+        fill(tmp)
+        os.rename(tmp, final)
+
     def write_wave(self, table: str, df: DataFrame, wave: int) -> None:
         """Write one wave's data for `table` with an atomic dir rename.
 
         BUCKETED_TABLES are clustered by digest shard before writing
         (repartition by shard → partitionBy(shard) → one file per shard)."""
-        final = self._wave_dir(table, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)  # garbage from a killed, uncommitted run
-        self._write_data(table, df, tmp)
-        os.rename(tmp, final)
+        self._write_atomic(
+            self._wave_dir(table, wave), lambda tmp: self._write_data(table, df, tmp)
+        )
 
     def _write_data(self, table: str, df: DataFrame, path: str) -> None:
         """Write `df` as parquet under `path`. BUCKETED_TABLES are hashed
@@ -483,13 +492,10 @@ class Warehouse:
         """Write one wave's delete file (kind: 'position' | 'equality')."""
         if kind not in ("position", "equality"):
             raise ValueError(f"unknown delete kind {kind!r}")
-        final = self._delete_dir(table, kind, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        df.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
+        self._write_atomic(
+            self._delete_dir(table, kind, wave),
+            lambda tmp: df.write.mode("overwrite").parquet(tmp),
+        )
 
     def read_delete_files(
         self, table: str, kind: str, through_wave: int, schema: T.StructType
@@ -568,20 +574,18 @@ class SpecWarehouse(Warehouse):
         """Write one wave under an explicit partition spec, recording the
         spec beside the data (atomic dir rename, same crash discipline as
         write_wave)."""
-        final = self._wave_dir(table, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        (
-            df.repartition(*spec_cols)
-            .write.mode("overwrite")
-            .partitionBy(*spec_cols)
-            .parquet(tmp)
-        )
-        with open(_spec_path(tmp), "w") as f:
-            json.dump({"spec": spec_cols}, f)
-        os.rename(tmp, final)
+
+        def fill(tmp: str) -> None:
+            (
+                df.repartition(*spec_cols)
+                .write.mode("overwrite")
+                .partitionBy(*spec_cols)
+                .parquet(tmp)
+            )
+            with open(_spec_path(tmp), "w") as f:
+                json.dump({"spec": spec_cols}, f)
+
+        self._write_atomic(self._wave_dir(table, wave), fill)
 
     def wave_spec(self, table: str, wave: int) -> list[str]:
         with open(_spec_path(self._wave_dir(table, wave))) as f:
@@ -662,15 +666,13 @@ class EvoWarehouse(SpecWarehouse):
             raise ValueError(
                 f"{table} is bucketed — use write_wave, not write_wave_ids"
             )
-        final = self._wave_dir(table, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        df.write.mode("overwrite").parquet(tmp)
-        with open(_schema_sidecar(tmp), "w") as f:
-            json.dump({"field_ids": field_ids}, f)
-        os.rename(tmp, final)
+
+        def fill(tmp: str) -> None:
+            df.write.mode("overwrite").parquet(tmp)
+            with open(_schema_sidecar(tmp), "w") as f:
+                json.dump({"field_ids": field_ids}, f)
+
+        self._write_atomic(self._wave_dir(table, wave), fill)
 
     def read_wave_evolved(
         self,
@@ -739,25 +741,23 @@ class HiddenPartWarehouse(EvoWarehouse):
     def write_wave_hidden(
         self, table: str, df: DataFrame, wave: int, hspec: list[dict]
     ) -> None:
-        final = self._wave_dir(table, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
         out = df
         names = []
         for e in hspec:
             out = out.withColumn(e["name"], self._hidden_expr(e))
             names.append(e["name"])
-        (
-            out.repartition(*names)
-            .write.mode("overwrite")
-            .partitionBy(*names)
-            .parquet(tmp)
-        )
-        with open(_spec_path(tmp), "w") as f:
-            json.dump({"hidden": hspec}, f)
-        os.rename(tmp, final)
+
+        def fill(tmp: str) -> None:
+            (
+                out.repartition(*names)
+                .write.mode("overwrite")
+                .partitionBy(*names)
+                .parquet(tmp)
+            )
+            with open(_spec_path(tmp), "w") as f:
+                json.dump({"hidden": hspec}, f)
+
+        self._write_atomic(self._wave_dir(table, wave), fill)
 
     def read_wave_hidden_pruned(
         self,

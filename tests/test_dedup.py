@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rcspark.constants import BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES, BLOOM_SHARDS
-from rcspark.dedup import bloom_probe, bloom_update, empty_bloom, filter_unseen
+from rcspark.dedup import bloom_probe_broadcast, bloom_update, empty_bloom, filter_unseen
 from rcspark.tables import BLOOM_SCHEMA, empty_frame
 
 
@@ -26,57 +26,32 @@ def bloom_with_5k(spark):
 
 def test_bloom_no_false_negatives(spark, bloom_with_5k):
     inserted, bloom = bloom_with_5k
-    probed = bloom_probe(_digests(spark, inserted), bloom)
+    probed = bloom_probe_broadcast(_digests(spark, inserted), bloom)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_bloom_fpr_bounded(spark, bloom_with_5k):
     _, bloom = bloom_with_5k
     novel = [f"http://other{i % 5}.example/q/{i}" for i in range(20000)]
-    fp = bloom_probe(_digests(spark, novel), bloom).filter(F.col("maybe_seen")).count()
+    fp = bloom_probe_broadcast(_digests(spark, novel), bloom).filter(F.col("maybe_seen")).count()
     # theoretical FPR at n=5000/32 shards, m=2^20, k=7 is ~1e-17; any
     # measurable rate means broken mixing — allow a generous 0.1%
     assert fp / len(novel) < 0.001, fp
 
 
 def test_filter_unseen_exact(spark, bloom_with_5k):
+    from pyspark.broadcast import Broadcast
+
     inserted, bloom = bloom_with_5k
     seen = _digests(spark, inserted).withColumn("wave", F.lit(0))
     mixed = inserted[:500] + [f"http://fresh.example/n/{i}" for i in range(500)]
-    out = filter_unseen(_digests(spark, mixed), bloom, seen)
+    held: list = []
+    out = filter_unseen(_digests(spark, mixed), bloom, seen, persisted_out=held)
     got = sorted(r.url_canon for r in out.collect())
     assert got == sorted(f"http://fresh.example/n/{i}" for i in range(500))
-
-
-def test_filter_unseen_auto_switches_probe_path(spark, bloom_with_5k):
-    """The broadcast-vs-cogroup switch (VERDICT r1 #7) picks by measured
-    sketch bytes: a 0-byte threshold must force the cogroup branch, the
-    default must take the broadcast branch, and BOTH must return the same
-    rows (the switch is a physical-plan choice, never a semantics one)."""
-    inserted, bloom = bloom_with_5k
-    seen = _digests(spark, inserted).withColumn("wave", F.lit(0))
-    mixed = inserted[:200] + [f"http://fresh.example/s/{i}" for i in range(200)]
-    res_bcast: list = []
-    out_bcast = filter_unseen(
-        _digests(spark, mixed), bloom, seen, persisted_out=res_bcast
-    )
-    got_bcast = sorted(r.url_canon for r in out_bcast.collect())
-    # broadcast branch leaves its Broadcast handle in persisted_out
-    from pyspark.broadcast import Broadcast
-
-    assert any(isinstance(h, Broadcast) for h in res_bcast)
-
-    res_cg: list = []
-    out_cg = filter_unseen(
-        _digests(spark, mixed), bloom, seen,
-        persisted_out=res_cg, broadcast_max_bytes=0,
-    )
-    got_cg = sorted(r.url_canon for r in out_cg.collect())
-    assert not any(isinstance(h, Broadcast) for h in res_cg)
-    assert got_bcast == got_cg == sorted(
-        f"http://fresh.example/s/{i}" for i in range(200)
-    )
-    for h in (*res_bcast, *res_cg):
+    # the probe's Broadcast handle is released with the persisted frames
+    assert any(isinstance(h, Broadcast) for h in held)
+    for h in held:
         h.unpersist()
 
 
@@ -93,8 +68,8 @@ def test_bloom_update_preserves_untouched_shards(spark):
 
 def test_filter_unseen_sparse_sketch_matches_full(spark):
     """A sketch grown from an empty frame holds only the shards its digests
-    reached; a missing shard probes all-miss, so both probe paths return
-    the same rows over it as over the full sketch grown from empty_bloom."""
+    reached; a missing shard probes all-miss, so the probe returns the
+    same rows over it as over the full sketch grown from empty_bloom."""
     inserted = [f"http://h{i % 3}.example/p/{i}" for i in range(12)]
     seen = _digests(spark, inserted).withColumn("wave", F.lit(0))
     sparse = bloom_update(_digests(spark, inserted), empty_frame(spark, BLOOM_SCHEMA))
@@ -104,12 +79,10 @@ def test_filter_unseen_sparse_sketch_matches_full(spark):
     mixed = inserted[:6] + [f"http://fresh.example/z/{i}" for i in range(300)]
     got = {}
     for sketch_name, sketch in (("sparse", sparse), ("full", full)):
-        for probe, max_bytes in (("broadcast", None), ("cogroup", 0)):
-            held: list = []
-            kw = {} if max_bytes is None else {"broadcast_max_bytes": max_bytes}
-            out = filter_unseen(_digests(spark, mixed), sketch, seen, persisted_out=held, **kw)
-            got[sketch_name, probe] = sorted(r.url_canon for r in out.collect())
-            for h in held:
-                h.unpersist()
+        held: list = []
+        out = filter_unseen(_digests(spark, mixed), sketch, seen, persisted_out=held)
+        got[sketch_name] = sorted(r.url_canon for r in out.collect())
+        for h in held:
+            h.unpersist()
     want = sorted(f"http://fresh.example/z/{i}" for i in range(300))
     assert all(rows == want for rows in got.values()), {k: len(v) for k, v in got.items()}

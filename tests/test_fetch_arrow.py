@@ -318,9 +318,11 @@ def test_async_transport_classifies_faults():
     truncated page recorded as fetched: a Content-Length longer than the
     body, a stall past the timeout, a truncated chunk, a non-hex chunk
     size and a non-HTTP status line give (None, None, None); a 503 keeps
-    its status; the healthy URL in the same batch is intact. Driven
+    its status; the healthy URL in the same batch is intact. Each fault
+    came on a fresh connection, so none is requested twice. Driven
     directly (no Spark)."""
     import threading
+    from collections import Counter
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     from rcspark.fetch import AsyncHttpTransport
@@ -339,12 +341,16 @@ def test_async_transport_classifies_faults():
         "/not-http": b"ICY 200 OK\r\n\r\n",
     }
     release = threading.Event()
+    requests: Counter = Counter()
+    lock = threading.Lock()
 
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
         disable_nagle_algorithm = True
 
         def do_GET(self):
+            with lock:
+                requests[self.path] += 1
             if self.path == "/stall":
                 release.wait(30)
             else:
@@ -376,9 +382,57 @@ def test_async_transport_classifies_faults():
             "/chunk-hex": failed,
             "/not-http": failed,
         }
+        assert requests == Counter(paths), requests
         assert elapsed < 3 * timeout, elapsed
     finally:
         release.set()
+        srv.shutdown()
+
+
+def test_async_transport_retries_stale_keepalive_socket():
+    """A server that answers one request as keep-alive and then closes the
+    socket leaves the transport a stale connection: the next request on it
+    fails and is sent once more on a fresh connection, so at concurrency=1
+    both URLs succeed over two connections, each requested once."""
+    import threading
+    from collections import Counter
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from rcspark.fetch import AsyncHttpTransport
+
+    stats = {"conns": 0, "requests": Counter()}
+
+    class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+        disable_nagle_algorithm = True
+
+        def setup(self):
+            stats["conns"] += 1
+            super().setup()
+
+        def do_GET(self):
+            stats["requests"][self.path] += 1
+            body = self.path.encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()  # no Connection: close — the client keeps it
+            self.wfile.write(body)
+            self.close_connection = True
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        res = AsyncHttpTransport(timeout=5.0, concurrency=1).fetch_many(
+            [f"{base}/a", f"{base}/b"]
+        )
+        assert res == [(200, None, b"/a"), (200, None, b"/b")]
+        assert stats["conns"] == 2
+        assert stats["requests"] == Counter(["/a", "/b"])
+    finally:
         srv.shutdown()
 
 
