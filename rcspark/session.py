@@ -32,9 +32,11 @@ DRIVER_HEAP_FALLBACK = "4g"  # RAM size unreadable
 CODEGEN_CACHE_ENTRIES = 2000
 
 # Spark forks its Python workers from this daemon, which has the engine's
-# UDF modules and their numpy/pandas/pyarrow imports already loaded. The
-# workers' path names this package's root, so the daemon starts whatever
-# the driver's working directory is.
+# UDF modules and their numpy/pandas/pyarrow imports already loaded, and
+# with Spark's pyspark/py4j/spark-core archives off its path (a worker
+# re-read them all before every task; see pydaemon). The workers' path
+# names this package's root, so the daemon starts whatever the driver's
+# working directory is.
 PYTHON_DAEMON_MODULE = "rcspark.pydaemon"
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
