@@ -618,3 +618,152 @@ def test_async_transport_chunked_and_close_delimited():
         assert res[1] == (200, None, b"until-eof-body")
     finally:
         srv.shutdown()
+
+
+def test_async_transport_admits_new_connections_per_address():
+    """A burst of new connections to one address is admitted
+    `concurrency` at a time: each holds a slot from its connect until its
+    first response has been read, so at most `concurrency` connections are
+    ever waiting on the server, however many virtual hosts resolve to it.
+    Kept-alive connections skip the gate, so the connection count is
+    unchanged: one per worker, `concurrency` per host."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from rcspark.fetch import AsyncHttpTransport
+
+    stats = {"conns": 0, "unanswered": 0, "max_unanswered": 0}
+    lock = threading.Lock()
+
+    class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+        disable_nagle_algorithm = True
+
+        def setup(self):
+            with lock:
+                stats["conns"] += 1
+                stats["unanswered"] += 1
+                stats["max_unanswered"] = max(stats["max_unanswered"], stats["unanswered"])
+            self.answered = False
+            super().setup()
+
+        def do_GET(self):
+            if not self.answered:
+                time.sleep(0.05)  # a slow first response keeps the burst in flight
+                with lock:
+                    stats["unanswered"] -= 1
+                self.answered = True
+            body = self.path.encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    class Server(ThreadingHTTPServer):
+        request_queue_size = 128  # above the burst: the server never drops a SYN
+
+    srv = Server(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    port = srv.server_address[1]
+    try:
+        urls = [f"http://h{h}.example/p/{j}" for h in range(12) for j in range(10)]
+        res = AsyncHttpTransport(
+            timeout=10.0, concurrency=4, resolve=lambda host, p: ("127.0.0.1", port)
+        ).fetch_many(urls)
+        assert [r[0] for r in res] == [200] * 120
+        assert stats["max_unanswered"] <= 4, stats
+        assert stats["conns"] == 12 * 4, stats
+    finally:
+        srv.shutdown()
+
+
+def test_async_transport_failed_connect_releases_its_slot():
+    """A request that fails on a fresh connection, as a malformed response
+    or as a stall past `timeout`, gives its address slot back: at
+    concurrency=1 the next URLs to that address (another virtual host's,
+    and the failing host's own next one) still go out, and the call costs
+    one `timeout`. A slot kept on the exception path would deadlock here."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from rcspark.fetch import AsyncHttpTransport
+
+    release = threading.Event()
+
+    class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+        disable_nagle_algorithm = True
+
+        def do_GET(self):
+            if self.path == "/not-http":
+                self.wfile.write(b"ICY 200 OK\r\n\r\n")
+                self.close_connection = True
+            elif self.path == "/stall":
+                release.wait(30)
+                self.close_connection = True
+            else:
+                body = self.path.encode()
+                self.send_response(200)
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    port = srv.server_address[1]
+    timeout = 1.0
+    urls = ["http://bad.example/not-http", "http://bad.example/stall",
+            "http://bad.example/ok/3", "http://good.example/ok/1",
+            "http://good.example/ok/2"]
+    tr = AsyncHttpTransport(timeout=timeout, concurrency=1,
+                            resolve=lambda host, p: ("127.0.0.1", port))
+    out = []
+    try:
+        t0 = time.monotonic()
+        # in a thread: a leaked slot hangs fetch_many, and the test must fail, not hang
+        t = threading.Thread(target=lambda: out.append(tr.fetch_many(urls)), daemon=True)
+        t.start()
+        t.join(2 * timeout)
+        elapsed = time.monotonic() - t0
+        assert not t.is_alive(), "fetch_many still running: an address slot leaked"
+        assert out == [[(None, None, None), (None, None, None), (200, None, b"/ok/3"),
+                        (200, None, b"/ok/1"), (200, None, b"/ok/2")]]
+        assert elapsed < 2 * timeout, elapsed
+    finally:
+        release.set()
+        srv.shutdown()
+
+
+def test_async_transport_header_block_cut_by_eof_fails():
+    """A response whose connection closes inside its header block is
+    'failed', not a fetched page with no body: the header block is read
+    whole, up to its empty line, and EOF before that line is an error."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from rcspark.fetch import AsyncHttpTransport
+
+    class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+        disable_nagle_algorithm = True
+
+        def do_GET(self):
+            self.wfile.write(b"HTTP/1.1 200 OK\r\nContent-Le")
+            self.close_connection = True
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        url = f"http://127.0.0.1:{srv.server_address[1]}/cut"
+        assert AsyncHttpTransport(timeout=5.0).fetch_many([url]) == [(None, None, None)]
+    finally:
+        srv.shutdown()
